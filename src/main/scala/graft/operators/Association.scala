@@ -216,9 +216,11 @@ object Association {
     // ONE corpus pass for ALL pairs (the same melt as theilsU): explode
     // each row into its P pair cells, one groupBy builds every
     // contingency table at once — shuffle state is map-side-combined
-    // cell partials, never row-sized. Marginals / totals / distinct
-    // counts are windows over the cells frame keyed by pair id (cells =
-    // Σ|A|·|B| rows, bounded by cardinalities — never the data size).
+    // cell partials, never row-sized. Marginals and totals are windows
+    // over the cells frame keyed by pair id (cells = Σ|A|·|B| rows,
+    // bounded by cardinalities — never the data size); distinct counts
+    // are per-pair aggregates, since a collect_set window would copy the
+    // whole category set into every cell row (|A|·|B|·|B| values).
     // Categories group by their STRING form (the exploded struct needs
     // one homogeneous type, and it is what the oracle groups by too);
     // the one divergence from native grouping is a double-typed
@@ -242,8 +244,6 @@ object Association {
       .withColumn("__na", sum(col("__nab")).over(wa))
       .withColumn("__nb", sum(col("__nab")).over(wb))
       .withColumn("__n", sum(col("__nab")).over(wn))
-      .withColumn("__ra", size(collect_set(col("__a")).over(wn)))
-      .withColumn("__rb", size(collect_set(col("__b")).over(wn)))
     val n = col("__n").cast(DoubleType)
     val pab = col("__nab") / n
     val exp = col("__na").cast(DoubleType) * col("__nb") / n
@@ -259,8 +259,8 @@ object Association {
         decSum((col("__nab") - exp) * (col("__nab") - exp) / exp).as("__chi2o"),
         decSum(exp).as("__esum"),
         max(col("__n")).as("__N"),
-        max(col("__ra")).as("__RA"),
-        max(col("__rb")).as("__RB"))
+        count_distinct(col("__a")).as("__RA"),
+        count_distinct(col("__b")).as("__RB"))
       .withColumn("__chi2", col("__chi2o") + (col("__N") - col("__esum")))
     // literal pair list LEFT join: a pair with zero co-observed rows
     // still yields its (all-null) row — P rows, auto-broadcast

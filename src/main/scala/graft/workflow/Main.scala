@@ -16,8 +16,6 @@ import org.apache.spark.sql.SparkSession
 object Main {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.workflow.Main <config.yaml>")
-    val yaml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(args(0))), "UTF-8")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")
     val spark = SparkSession.builder()
       .appName("graft-workflow")
@@ -28,7 +26,7 @@ object Main {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val (df, stages) = Workflow.run(spark, yaml)
+    val (df, stages) = Workflow.runFile(spark, args(0))
     stages.foreach(s => println(f"[workflow] ${s.name}%-24s ${s.seconds}%8.2f s"))
     println(s"[workflow] result rows=${df.count()}")
     spark.stop()

@@ -77,6 +77,28 @@ quality_checker:
     assert(df.filter(col("x").isNull).count() == 0)
   }
 
+  test("workflow imputation_MMM imputes only list_of_cols, by method_type") {
+    val dir = java.nio.file.Files.createTempDirectory("wfmmm").toString
+    Seq((1L, Some(1.0), Some(5.0)), (2L, Some(2.0), None: Option[Double]),
+      (3L, Some(6.0), Some(7.0)), (4L, None: Option[Double], Some(9.0)))
+      .toDF("id", "x", "y").write.parquet(s"$dir/t")
+    val yaml = s"""
+input_dataset:
+  read_dataset:
+    file_path: "$dir/t"
+    file_type: parquet
+quality_checker:
+  imputation_MMM:
+    list_of_cols: [x]
+    method_type: mean
+"""
+    val (df, _) = Workflow.run(spark, yaml)
+    // x's null takes the mean of 1, 2 and 6 (the median would be 2)
+    assert(df.filter(col("id") === 4L).select("x").first().getDouble(0) == 3.0)
+    // y is numeric but outside list_of_cols: its null stays
+    assert(df.filter(col("y").isNull).count() == 1)
+  }
+
   test("workflow transformer stage: feature math, boxcox, model imputation") {
     val dir = java.nio.file.Files.createTempDirectory("wft").toString
     val rnd = new scala.util.Random(5)
@@ -569,7 +591,7 @@ quality_checker:
     list_of_cols: all
     treatment: true
   imputation_MMM:
-    method: median
+    method_type: median
   outlier_detection:
     list_of_cols: [age, fnlwgt, hours-per-week]
     treatment: true
@@ -1064,6 +1086,81 @@ tokenize:
     val viaStage = out.select(col("doc_id"), col("n_tokens_wordpiece"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(viaStage == direct)
+  }
+
+  test("workflow rejects an unknown key at any depth before reading any data") {
+    val out = java.nio.file.Files.createTempDirectory("wfkeys").toString
+    val orders = "/root/testdata/sf0.001/orders.parquet"
+    val read = s"""
+input_dataset:
+  read_dataset:
+    file_path: "$orders"
+    file_type: parquet
+"""
+    // (dotted path the error must name, stage blocks after the read)
+    val cases = Seq(
+      "stats_generatr" -> """
+stats_generatr:
+  list_of_cols: all
+""",
+      "quality_checker.outlier_detecton" -> """
+quality_checker:
+  outlier_detecton: {list_of_cols: [o_totalprice], treatment: true}
+""",
+      "transformers.attribute_binning.bin_sise" -> """
+transformers:
+  attribute_binning: {list_of_cols: [o_totalprice], bin_sise: 4}
+""",
+      // a valid write_main after the typo: the rejection must come before
+      // any stage runs, so the output path is never created
+      "report_preprocessing.save_pth" -> s"""
+report_preprocessing:
+  save_pth: "$out/report"
+write_main:
+  file_path: "$out/final"
+""")
+    cases.foreach { case (path, stages) =>
+      val err = intercept[IllegalArgumentException](Workflow.run(spark, read + stages))
+      assert(err.getMessage.contains(path), s"expected $path in: ${err.getMessage}")
+    }
+    assert(!new java.io.File(s"$out/final").exists(), "write_main ran before the rejection")
+  }
+
+  test("workflow runs its stages in the fixed table order, whatever the config order") {
+    val dir = java.nio.file.Files.createTempDirectory("wforder").toString
+    val orders = "/root/testdata/sf0.001/orders.parquet"
+    val yaml = s"""
+write_main:
+  file_path: "$dir/final"
+drift_detector:
+  source_path: "$orders"
+  list_of_cols: [o_totalprice]
+write_intermediate:
+  file_path: "$dir/mid"
+association_evaluator:
+  correlation_matrix: {list_of_cols: [o_totalprice, o_custkey]}
+transformers:
+  attribute_binning: {list_of_cols: [o_totalprice], bin_size: 4}
+heavy_hitters:
+  list_of_cols: [o_orderstatus]
+  k: 3
+quality_checker:
+  duplicate_detection: {list_of_cols: all, treatment: true}
+stats_generator:
+  list_of_cols: [o_totalprice]
+  metrics: [central_tendency]
+input_dataset:
+  read_dataset:
+    file_path: "$orders"
+    file_type: parquet
+  delete_column: [o_orderdate]
+  ts_preprocess: [o_orderpriority]
+"""
+    val (_, stages) = Workflow.run(spark, yaml)
+    assert(stages.map(_.name) == Seq("read_dataset", "ts_preprocess", "stats_generator",
+      "quality_checker", "heavy_hitters", "transformers", "association_evaluator",
+      "drift_detector", "write_intermediate", "write_main"))
+    assert(spark.read.parquet(s"$dir/final").columns.contains("o_totalprice_binned"))
   }
 
   test("workflow bm25_retrieval stage ranks configured queries") {
