@@ -1,20 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints formatted physical plans for selected queries so
   * pushdown / broadcast / whole-stage-codegen can be inspected.
   * Usage: runMain graft.Explain [queryName ...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = QuerySession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_agg_pricing_summary", "q_join_revenue_nation", "q_drift_statistics")

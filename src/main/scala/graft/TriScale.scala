@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Tri-scale growth guard: runs the most expensive queries at
   * sf0.001/sf0.01/sf0.1 and gates on sub-quadratic wall-time growth —
@@ -192,23 +191,7 @@ object TriScale {
     "q_bipartite_projection")
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE stays ON (coalescing/skew handling are the 100 TB story), but
-      // the coalesce floor drops from the 1m default: Spark's partition
-      // coalescing assumes cost ~ bytes, and our compute-dense, byte-light
-      // stages (text normalization regexes, posting-list buffers, HOF pair
-      // expansion) lose all 32-way parallelism when a few-hundred-KB
-      // shuffle coalesces to one task. At production partition sizes
-      // (tens of MB+) a 16k floor is byte-identical to the default.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QuerySession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val queries = SparkEntry.queries.filter { case (n, _) => guarded.contains(n) }
     def runOnce(name: String, dir: String): Double = {
       // cold-path honesty: the tokenizer fit memos would otherwise let

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,7 @@ object Verify {
     // optional extra args: dump only the named queries (iteration aid —
     // oracle_sql.json still carries every oracle)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS) — unreadable without this;
-      // Tables converts the resulting longs back to timestamps.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE stays ON (coalescing/skew handling are the 100 TB story), but
-      // the coalesce floor drops from the 1m default: Spark's partition
-      // coalescing assumes cost ~ bytes, and our compute-dense, byte-light
-      // stages (text normalization regexes, posting-list buffers, HOF pair
-      // expansion) lose all 32-way parallelism when a few-hundred-KB
-      // shuffle coalesces to one task. At production partition sizes
-      // (tens of MB+) a 16k floor is byte-identical to the default.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QuerySession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // A failed query must be a loud red row, not a silently-missing one
     // (round 8 lost 10 rows invisibly): collect every failure and write

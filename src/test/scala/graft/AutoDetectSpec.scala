@@ -101,8 +101,10 @@ class AutoDetectSpec extends SparkSpec {
     // the reference's own fixture + expected values
     // (test_ts_auto_detection.py:38-60: YR int column → date, first
     // row 1970-01-01)
+    val fixture = "/root/reference/examples/data/time_series_data/csv/productivity.csv"
+    assume(new java.io.File(fixture).exists())
     val df = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv("/root/reference/examples/data/time_series_data/csv/productivity.csv")
+      .csv(fixture)
     val det = AutoDetect.detectTimestampColumns(df, Seq("YR"))
     assert(det.head.format.contains("yyyy"), s"YR detection: ${det.head}")
     val cast = AutoDetect.tsPreprocess(df, det)
