@@ -9,6 +9,13 @@ import org.apache.spark.sql.functions._
   * hashed keys — no driver-side pairwise loops — so the same plans run
   * on 100 TB: candidate generation is hash-partitioned (LSH band
   * buckets), and only candidate pairs ever meet in a join.
+  *
+  * MinHash and SimHash have ONE hash family each, both built on the
+  * engine-portable 60-bit md5 prefix (`md5_prefix60`): MinHash members
+  * are md5 XOR a fixed salt ([[minhashSignaturesMd5]]), SimHash votes
+  * over md5 token hashes ([[simhashMd5]]). Every batch, index and
+  * streaming path runs these kernels, so every signature is replayable
+  * bit-for-bit in any SQL engine.
   */
 object Dedup {
 
@@ -283,60 +290,55 @@ object Dedup {
   private[graft] def shinglesCarrying(
       df: DataFrame, textCol: String, keyCol: String, n: Int,
       carry: Seq[String]): DataFrame = {
-    // Materialize the token array as a COLUMN before the transform lambda
-    // references it: interpreted higher-order functions re-evaluate any
-    // captured non-attribute subtree once PER ELEMENT, so capturing the
-    // split+regex construction directly made gram building O(len²) per
-    // doc (measured ~1 ms/doc at 50 tokens — it dominated every dedup
-    // pipeline). CollapseProject keeps the projection because the alias
-    // is referenced multiple times by non-cheap consumers.
-    val toks = col("__toks")
-    val grams = when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
     val carried = carry.map(col)
     // widen a narrow input (one-file scan, 1-partition checkpoint) so
     // the normalize→gram→explode map stage runs at session parallelism
     // instead of on one task; no-op when the input is already wide
     widenForCompute(df).select(col(keyCol).as("key") +: carried :+
         split(TextOps.normalizeText(col(textCol)), " ").as("__toks"): _*)
-      .select(col("key") +: carried :+ explode(array_distinct(grams)).as("shingle"): _*)
+      .select(col("key") +: carried :+ explode(array_distinct(wordGrams(n))).as("shingle"): _*)
       .filter(length(col("shingle")) > 0)
+  }
+
+  /** The word n-grams of a `__toks` token-array column, in order (empty
+    * when there are fewer than n tokens). The token array must be a
+    * COLUMN before the transform lambda references it: interpreted
+    * higher-order functions re-evaluate any captured non-attribute
+    * subtree once PER ELEMENT, so capturing the split+regex
+    * construction directly made gram building O(len²) per doc
+    * (measured ~1 ms/doc at 50 tokens — it dominated every dedup
+    * pipeline). CollapseProject keeps the projection because the alias
+    * is referenced multiple times by non-cheap consumers.
+    */
+  private def wordGrams(n: Int): Column = {
+    val toks = col("__toks")
+    when(size(toks) < n, array().cast("array<string>"))
+      .otherwise(transform(
+        sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
   /** Like [[shingles]] but keeps EVERY occurrence (no distinct) — the
     * input for within-doc repetition statistics, where occurrence
     * counts are the signal.
     */
-  def shinglesAll(df: DataFrame, textCol: String, keyCol: String, n: Int = 3): DataFrame = {
-    val toks = col("__toks")
-    val grams = when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+  def shinglesAll(df: DataFrame, textCol: String, keyCol: String, n: Int = 3): DataFrame =
     widenForCompute(df).select(col(keyCol).as("key"),
         split(TextOps.normalizeText(col(textCol)), " ").as("__toks"))
-      .select(col("key"), explode(grams).as("shingle"))
+      .select(col("key"), explode(wordGrams(n)).as("shingle"))
       .filter(length(col("shingle")) > 0)
-  }
 
-  /** MinHash signatures: h independent hash functions; one groupBy
-    * computes all h mins (single shuffle, h agg expressions).
-    * Each shingle string is hashed ONCE to a 64-bit base, and the h
-    * family members are xxhash64(base, salt_i) over the fixed-width
-    * base — re-hashing the variable-length string h times was the CPU
-    * hot spot of the whole pipeline (h × bytes traversals per shingle).
-    * Output: key, sig_0 … sig_{h-1}.
+  /** The one banding check of every MinHash path: 1 ≤ numHashes ≤ the
+    * md5 family size, bands ≥ 1, and bands divides numHashes. Called
+    * before any frame is built, so a bad value fails with the parameter
+    * named instead of a `/ by zero` or an empty `aggs.head` — and
+    * before the first Spark job.
     */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = 32): DataFrame = {
-    val aggs = minhashAggs(numHashes)
-    sh.groupBy("key").agg(aggs.head, aggs.tail: _*)
-  }
-
-  private def minhashAggs(numHashes: Int): Seq[Column] = {
-    val base = xxhash64(col("shingle"))
-    (0 until numHashes).map(i => min(xxhash64(base, lit(i))).as(s"sig_$i"))
+  private[graft] def checkBanding(numHashes: Int, bands: Int = 1): Unit = {
+    require(numHashes >= 1 && numHashes <= md5Salts.size,
+      s"numHashes must be in 1..${md5Salts.size} (the md5 family size), got $numHashes")
+    require(bands >= 1, s"bands must be >= 1, got $bands")
+    require(numHashes % bands == 0, s"bands ($bands) must divide numHashes ($numHashes)")
   }
 
   /** Fixed 60-bit salts for the md5 hash family (md5 of a versioned
@@ -351,13 +353,13 @@ object Dedup {
   /** Engine-portable MinHash signatures: base hash = first 60 bits of
     * md5(shingle), family member i = base XOR salt_i (each XOR is a
     * bijection on the hash space — a valid, order-scrambling MinHash
-    * family). Unlike the xxhash64 production default, every step (md5,
-    * hex-prefix parse, XOR, min) is bit-identical in any SQL engine, so
-    * the whole signature matrix is oracle-checkable. Same single-shuffle
-    * shape: one groupBy computes all h mins.
+    * family). Every step (md5, hex-prefix parse, XOR, min) is
+    * bit-identical in any SQL engine, so the whole signature matrix is
+    * oracle-checkable. Single shuffle: one groupBy computes all h mins,
+    * and each shingle is hashed once (the h members are XORs of it).
     */
   def minhashSignaturesMd5(sh: DataFrame, numHashes: Int = 16): DataFrame = {
-    require(numHashes <= md5Salts.size, s"at most ${md5Salts.size} md5 family members")
+    checkBanding(numHashes)
     graft.plans.GraftFunctions.register(sh.sparkSession)
     // fused native expression: no 32-char hex intermediate per shingle
     val base = expr("md5_prefix60(cast(shingle as binary))")
@@ -368,12 +370,11 @@ object Dedup {
       .groupBy("key").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH banding: split the h signature values into `bands` bands of
-    * h/bands rows; docs sharing any band bucket become candidate pairs.
-    * The band bucket join is hash-partitioned — the scale path: no
-    * all-pairs comparison ever materializes.
-    * Returns candidate pairs (key_1 < key_2) with their verified word
-    * n-gram Jaccard similarity; filter by `threshold`.
+  /** MinHash-LSH near-duplicates with the wider default banding (32
+    * hashes in 8 bands): the [[minhashNearDuplicatesMd5]] pipeline —
+    * the same md5 kernels, bucket cap and verification. Returns
+    * candidate pairs (key_1 < key_2) with their verified word n-gram
+    * Jaccard similarity ≥ `threshold`.
     */
   def minhashNearDuplicates(
       df: DataFrame,
@@ -383,35 +384,9 @@ object Dedup {
       numHashes: Int = 32,
       bands: Int = 8,
       threshold: Double = 0.7,
-      maxBucketSize: Int = 200): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val sh = shingles(df, textCol, keyCol, shingleSize)
-    // Materialize ONLY the signature columns (h+0 longs per doc — truly
-    // corpus-row sized): the band self-join sides prune different column
-    // sets, so without the checkpoint each consumer re-ran the whole
-    // normalize+explode+agg pipeline. The per-doc shingle SETS are NOT
-    // carried here — collect_set(shingle) is ~shingleSize× the normalized
-    // corpus bytes, and materializing that at 100 TB writes a multiple of
-    // the corpus to checkpoint storage. Verification instead recomputes
-    // shingles lazily for CANDIDATE docs only (semi-join below).
-    val sig = minhashSignatures(sh, numHashes)
-    val sigM = materialize(sig)
-    val bandCols = (0 until bands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"sig_${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), hash(parts: _*).as("bucket"))
-    }
-    // candidate pairs are tiny next to the corpus; materialize them so
-    // the candidate-key projection and the final verify join don't each
-    // re-run the band pair generation
-    val candidates = materialize(
-      bandPostingPairs(
-        sigM.select(col("key"), explode(array(bandCols: _*)).as("bb"))
-          .select(col("key"), col("bb.band"), col("bb.bucket")),
-        maxBucketSize)
-        .distinct())
-    verifyCandidates(df, textCol, keyCol, shingleSize, candidates, threshold)
-  }
+      maxBucketSize: Int = 200): DataFrame =
+    minhashNearDuplicatesMd5(df, textCol, keyCol, shingleSize, numHashes, bands,
+      threshold, maxBucketSize)
 
   /** Drop whole groups whose row count exceeds `cap` — the shared
     * count-window cap idiom (spillable sort state; the window's
@@ -473,12 +448,17 @@ object Dedup {
     * join's sort+probe. Posting lists are ≤ maxBucketSize keys ≈ KBs
     * per row.
     */
-  private def bandPostingPairs(assigned: DataFrame, maxBucketSize: Int): DataFrame = {
-    val posting = cappedPostings(assigned, Seq("band", "bucket"), maxBucketSize)
+  private def bandPostingPairs(assigned: DataFrame, maxBucketSize: Int): DataFrame =
+    postingPairs(cappedPostings(assigned, Seq("band", "bucket"), maxBucketSize))
+
+  /** All i<j key pairs of each posting list (`ks0`) as (key_1, key_2)
+    * rows: a nested HOF over the SORTED list, so key_1 < key_2 holds by
+    * construction (the self-join's a.key < b.key). Lists of one key
+    * emit nothing.
+    */
+  private def postingPairs(posting: DataFrame): DataFrame = {
     val ks = array_sort(col("ks0"))
     val m = size(ks)
-    // all i<j pairs of the sorted posting list; sorting makes
-    // key_1 < key_2 by construction (the join's a.key < b.key)
     val pairStructs = flatten(transform(sequence(lit(0), m - 2),
       i => transform(sequence(i + 1, m - 1),
         j => struct(element_at(ks, i + 1).as("key_1"), element_at(ks, j + 1).as("key_2")))))
@@ -487,41 +467,14 @@ object Dedup {
       .select(col("p.key_1"), col("p.key_2"))
   }
 
-  /** Jaccard verification of candidate pairs: rebuild shingle SETS for
-    * candidate docs only — the semi-join prunes the corpus BEFORE
-    * normalize+explode, so the expensive collect_set touches
-    * |candidates| docs, not the corpus.
-    */
-  private def verifyCandidates(
-      df: DataFrame,
-      textCol: String,
-      keyCol: String,
-      shingleSize: Int,
-      candidates: DataFrame,
-      threshold: Double): DataFrame = {
-    val candKeys = candidates.select(col("key_1").as(keyCol))
-      .union(candidates.select(col("key_2").as(keyCol)))
-      .distinct()
-    val docs = shingles(df.join(candKeys, Seq(keyCol), "left_semi"), textCol, keyCol, shingleSize)
-      .groupBy("key")
-      .agg(collect_set(col("shingle")).as("hs"), count(lit(1)).as("n"))
-    candidates
-      .join(docs.select(col("key").as("key_1"), col("hs").as("hs1"), col("n").as("n1")), "key_1")
-      .join(docs.select(col("key").as("key_2"), col("hs").as("hs2"), col("n").as("n2")), "key_2")
-      .withColumn("inter", size(array_intersect(col("hs1"), col("hs2"))).cast("long"))
-      .select(col("key_1"), col("key_2"),
-        round(col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   /** Engine-portable MinHash near-duplicates: md5-family signatures
     * ([[minhashSignaturesMd5]]) and band buckets keyed by the band's RAW
     * signature values (no engine-specific hash of the band), so the
     * bucket assignment, size cap, candidate join, and Jaccard verify are
     * all replayable in any SQL engine — the FULL near-dup output is
-    * oracle-checkable (q_minhash_neardup). Same scale shape as the
-    * xxhash production path: one signature shuffle, hash-partitioned
-    * band join, capped buckets, lazy verification.
+    * oracle-checkable (q_minhash_neardup). Scale shape: one signature
+    * shuffle, hash-partitioned band join, capped buckets, lazy
+    * verification.
     */
   def minhashNearDuplicatesMd5(
       df: DataFrame,
@@ -532,12 +485,40 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.7,
       maxBucketSize: Int = 200): DataFrame = {
-    // fail fast on a bad band count BEFORE the signature job materializes
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    // fail fast on bad banding BEFORE the signature job materializes
+    checkBanding(numHashes, bands)
     val sh = shingles(df, textCol, keyCol, shingleSize)
+    // Materialize ONLY the signature columns (h longs per doc — truly
+    // corpus-row sized): the band self-join sides prune different column
+    // sets, so without the checkpoint each consumer re-ran the whole
+    // normalize+explode+agg pipeline. The per-doc shingle SETS are NOT
+    // carried here — collect_set(shingle) is ~shingleSize× the normalized
+    // corpus bytes, and materializing that at 100 TB writes a multiple of
+    // the corpus to checkpoint storage. Verification instead recomputes
+    // shingles lazily for CANDIDATE docs only: the semi-join prunes the
+    // corpus BEFORE normalize+explode, so the collect_set touches
+    // |candidates| docs, not the corpus.
     val sigM = materialize(minhashSignaturesMd5(sh, numHashes))
     val candidates = md5BandCandidates(sigM, numHashes, bands, maxBucketSize)
-    verifyCandidates(df, textCol, keyCol, shingleSize, candidates, threshold)
+    val candKeys = candidates.select(col("key_1").as(keyCol))
+      .union(candidates.select(col("key_2").as(keyCol)))
+      .distinct()
+    jaccardOfPairs(candidates,
+        shingles(df.join(candKeys, Seq(keyCol), "left_semi"), textCol, keyCol, shingleSize))
+      .filter(col("jaccard") >= threshold)
+  }
+
+  /** One (band, bucket) struct per band over an md5 signature frame
+    * (key, sig_0…sig_{h-1}): the bucket is the band's RAW signature
+    * values, the engine-portable bucket identity every batch, index and
+    * streaming path shares.
+    */
+  private def bandColumns(numHashes: Int, bands: Int): Seq[Column] = {
+    val rowsPerBand = numHashes / bands
+    (0 until bands).map { b =>
+      val parts = (0 until rowsPerBand).map(r => col(s"sig_${b * rowsPerBand + r}"))
+      struct(lit(b).as("band"), array(parts: _*).as("bucket"))
+    }
   }
 
   /** Band-bucket candidate pairs over an md5 signature frame (key,
@@ -545,21 +526,19 @@ object Dedup {
     * values, oversized buckets dropped whole, pairs deduped across
     * bands. Shared by the batch pipeline and the batch/stream
     * equivalence spec (the streaming path must produce this exact set).
+    * Candidate pairs are tiny next to the corpus; they are materialized
+    * so the candidate-key projection and the verify join don't each
+    * re-run the band pair generation.
     */
   private[graft] def md5BandCandidates(
       sigM: DataFrame,
       numHashes: Int,
       bands: Int,
       maxBucketSize: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"sig_${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), array(parts: _*).as("bucket"))
-    }
+    checkBanding(numHashes, bands)
     materialize(
       bandPostingPairs(
-        sigM.select(col("key"), explode(array(bandCols: _*)).as("bb"))
+        sigM.select(col("key"), explode(array(bandColumns(numHashes, bands): _*)).as("bb"))
           .select(col("key"), col("bb.band"), col("bb.bucket")),
         maxBucketSize)
         .distinct())
@@ -637,16 +616,11 @@ object Dedup {
       shingleSize: Int,
       numHashes: Int,
       bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
+    checkBanding(numHashes, bands)
     val sig = minhashSignaturesMd5(shingles(df, textCol, keyCol, shingleSize), numHashes)
     val sigCols = (0 until numHashes).map(i => col(s"sig_$i"))
-    val bandCols = (0 until bands).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"sig_${b * rowsPerBand + r}"))
-      struct(lit(b).as("band"), array(parts: _*).as("bucket"))
-    }
     sig.select(col("key"), array(sigCols: _*).as("sig"),
-        explode(array(bandCols: _*)).as("bb"))
+        explode(array(bandColumns(numHashes, bands): _*)).as("bb"))
       .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"),
         col("key"), col("sig"))
   }
@@ -671,7 +645,7 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4,
       threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    checkBanding(numHashes, bands)
     validateIndex(index, shingleSize, numHashes, bands)
     val probe = bandedSignatures(newDf, textCol, keyCol, shingleSize, numHashes, bands)
       .select(col("band"), col("bucket"),
@@ -747,28 +721,13 @@ object Dedup {
         round(col("inter") * lit(1.0) / (col("n1") + col("n2") - col("inter")), 4).as("jaccard"))
   }
 
-  /** 64-bit SimHash per document via the native vote-buffer aggregate
-    * (graft.plans.SimHashAgg — ONE TypedImperativeAggregate buffer per
-    * group instead of 64 separate sum() buffers). One explode + one
-    * shuffle.
-    */
-  def simhash(df: DataFrame, textCol: String, keyCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    df.select(col(keyCol).as("key"),
-        explode(split(TextOps.normalizeText(col(textCol)), " ")).as("tok"))
-      .filter(length(col("tok")) > 0)
-      .groupBy("key")
-      .agg(expr("simhash_agg(tok)").as("simhash"))
-  }
-
   /** Engine-portable SimHash: 60-bit fingerprint from md5 token hashes —
     * bit b of the fingerprint is set iff distinct tokens with bit b set
     * outnumber those with it clear (strict majority; tie → 0). Runs as
-    * one explode + one combining groupBy with 60 codegen'd signed-vote
-    * sums, then a pure projection folds the votes into the fingerprint.
-    * Every step (md5, hex parse, shift/mask, sum, compare) is
-    * bit-identical in any SQL engine → the fingerprint column is
-    * oracle-checkable, unlike the xxhash64 `simhash_agg` production path.
+    * one explode + one combining groupBy over a single 60-counter vote
+    * buffer per doc. Every step (md5, hex parse, shift/mask, vote,
+    * compare) is bit-identical in any SQL engine → the fingerprint
+    * column is oracle-checkable.
     */
   def simhashMd5(df: DataFrame, textCol: String, keyCol: String): DataFrame = {
     graft.plans.GraftFunctions.register(df.sparkSession)
@@ -782,24 +741,50 @@ object Dedup {
       .groupBy("key").agg(expr("simhash_votes(__h)").as("simhash"))
   }
 
-  /** Banded chunk join over a [key, simhash] frame: candidates share at
-    * least one of the `bits/chunkBits` chunks (guarantees recall for
-    * hamming distance < #chunks), then exact hamming verify via
-    * bit_count(xor). Hash-partitioned on (chunk, value) — never an
-    * all-pairs comparison.
+  /** Scalar twin of [[simhashMd5]] for one document — the per-row
+    * fingerprint the STREAMING path computes locally (no shuffle): the
+    * same distinct normalized tokens, md5-prefix-60 hashes and 60-bit
+    * vote fold, so it equals the batch aggregate bit for bit. A doc with
+    * no tokens folds zero votes to 0.
     */
-  private def simhashChunkJoin(
-      sig: DataFrame,
-      bits: Int,
-      chunkBits: Int,
-      maxHamming: Int,
+  private[graft] def simhashMd5Local(text: String): Long = {
+    val votes = new Array[Int](60)
+    if (text != null)
+      TextOps.normalizeTextString(text).split(" ").distinct.foreach { t =>
+        if (t.nonEmpty) graft.plans.SimHashVoteAgg.vote(votes,
+          graft.plans.Md5Prefix60Expr.hash(t.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      }
+    graft.plans.SimHashVoteAgg.fold(votes)
+  }
+
+  /** The md5 SimHash fingerprint splits into 4 chunks of 15 bits for
+    * candidate generation, in batch and in the streaming twin alike.
+    */
+  private[graft] val simhashChunkBits = 15
+  private[graft] val simhashChunks = 60 / simhashChunkBits
+
+  /** SimHash near-duplicates over the engine-portable 60-bit md5
+    * fingerprint ([[simhashMd5]]): a banded chunk join where candidates
+    * share at least one of the four 15-bit chunks (guarantees recall for
+    * hamming distance < 4), then exact hamming verify via
+    * bit_count(xor). Hash-partitioned on (chunk, value) — never an
+    * all-pairs comparison. Every step — fingerprint, chunk split,
+    * candidate join, hamming verify — is bit-identical in any SQL
+    * engine, so the FULL near-dup output is oracle-checkable
+    * (q_simhash_neardup), not just the fingerprint.
+    */
+  def simhashNearDuplicatesMd5(
+      df: DataFrame,
+      textCol: String,
+      keyCol: String,
+      maxHamming: Int = 3,
       maxBucketSize: Int = 10000): DataFrame = {
-    val nChunks = bits / chunkBits
-    val mask = (1L << chunkBits) - 1
-    val chunks = (0 until nChunks).map(i =>
+    val mask = (1L << simhashChunkBits) - 1
+    val chunks = (0 until simhashChunks).map(i =>
       struct(lit(i).as("chunk"),
-        shiftright(col("simhash"), i * chunkBits).bitwiseAND(mask).as("val")))
-    val keyed = sig.select(col("key"), col("simhash"), explode(array(chunks: _*)).as("cc"))
+        shiftright(col("simhash"), i * simhashChunkBits).bitwiseAND(mask).as("val")))
+    val keyed = simhashMd5(df, textCol, keyCol)
+      .select(col("key"), col("simhash"), explode(array(chunks: _*)).as("cc"))
       .select(col("key"), col("simhash"), col("cc.chunk"), col("cc.val"))
     // degenerate-bucket cap, same contract as every other candidate
     // path: a chunk value shared by m docs (identical boilerplate →
@@ -832,31 +817,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
-
-  /** SimHash near-duplicates over the 64-bit xxhash fingerprint:
-    * four 16-bit chunks.
-    */
-  def simhashNearDuplicates(
-      df: DataFrame,
-      textCol: String,
-      keyCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    simhashChunkJoin(simhash(df, textCol, keyCol), 64, 16, maxHamming, maxBucketSize)
-
-  /** SimHash near-duplicates over the engine-portable 60-bit md5
-    * fingerprint ([[simhashMd5]]): four 15-bit chunks. Every step —
-    * fingerprint, chunk split, candidate join, hamming verify — is
-    * bit-identical in any SQL engine, so the FULL near-dup output is
-    * oracle-checkable (q_simhash_neardup), not just the fingerprint.
-    */
-  def simhashNearDuplicatesMd5(
-      df: DataFrame,
-      textCol: String,
-      keyCol: String,
-      maxHamming: Int = 3,
-      maxBucketSize: Int = 10000): DataFrame =
-    simhashChunkJoin(simhashMd5(df, textCol, keyCol), 60, 15, maxHamming, maxBucketSize)
 
   /** Embedding-cosine near-duplicates: pairs above the similarity
     * threshold from the ANN index (LSH buckets — the scale path), plus a
@@ -1205,16 +1165,7 @@ object Dedup {
     // derived from the kept posting lists (bounded arrays)
     val sizes = posting.select(explode(col("ks0")).as("key"))
       .groupBy("key").agg(count(lit(1)).as("n"))
-    val ks = array_sort(col("ks0"))
-    val m = size(ks)
-    // all i<j pairs of the sorted posting list; sorting makes
-    // key_1 < key_2 by construction (the join's a.key < b.key)
-    val pairStructs = flatten(transform(sequence(lit(0), m - 2),
-      i => transform(sequence(i + 1, m - 1),
-        j => struct(element_at(ks, i + 1).as("key_1"), element_at(ks, j + 1).as("key_2")))))
-    posting.filter(m >= 2)
-      .select(explode(pairStructs).as("p"))
-      .select(col("p.key_1"), col("p.key_2"))
+    postingPairs(posting)
       .groupBy("key_1", "key_2")
       .agg(count(lit(1)).as("inter"))
       .join(sizes.select(col("key").as("key_1"), col("n").as("n1")), "key_1")

@@ -235,14 +235,10 @@ object Similarity {
   /** Driver-side md5 prefix-60: first 15 hex chars of md5(s) as a long —
     * the same value DuckDB's `('0x' || substr(md5(s), 1, 15))::BIGINT`
     * yields, and the scalar twin of the codegen'd md5_prefix60
-    * expression.
+    * expression (it calls the same hasher).
     */
-  private[graft] def md5Prefix60(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.lang.Long.parseLong(
-      d.take(8).map(b => f"$b%02x").mkString.take(15), 16)
-  }
+  private[graft] def md5Prefix60(s: String): Long =
+    graft.plans.Md5Prefix60Expr.hash(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Deterministic hyperplanes from the md5 family: plane p, dim d →
     * md5_prefix60("srp:<seed>:<p>:<d>") / 2⁵⁹ − 1 ∈ [−1, 1). Driver-side

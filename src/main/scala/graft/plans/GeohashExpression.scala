@@ -64,8 +64,6 @@ object GraftFunctions {
     Seq(
       ("geohash_encode", classOf[GeohashEncodeExpr],
         exprs => GeohashEncodeExpr(exprs(0), exprs(1), exprs(2))),
-      ("simhash_agg", classOf[SimHashAgg],
-        exprs => SimHashAgg(exprs.head).toAggregateExpression()),
       ("md5_prefix60", classOf[Md5Prefix60Expr],
         exprs => Md5Prefix60Expr(exprs.head)),
       ("simhash_votes", classOf[SimHashVoteAgg],

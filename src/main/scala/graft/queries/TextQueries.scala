@@ -13,6 +13,32 @@ object TextQueries {
   private val normSql =
     "trim(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
 
+  /** Oracle replay of the md5 MinHash family: the aggregate list
+    * `min(xor(h, salt_i)) AS sig_i` over an `h` column, one per member.
+    */
+  private def md5SigDefs(numHashes: Int): String =
+    Dedup.md5Salts.take(numHashes).zipWithIndex
+      .map { case (salt, i) => s"min(xor(h, $salt)) AS sig_$i" }.mkString(", ")
+
+  /** Oracle replay of the raw-value banding of 16 hashes in 4 bands: one
+    * (doc_id, band, v0..v3) row per band of each row of `src`.
+    */
+  private def md5BandSelects(src: String): String = (0 until 4).map { b =>
+    val vs = (0 until 4).map(r => s"sig_${b * 4 + r} AS v$r").mkString(", ")
+    s"SELECT doc_id, $b AS band, $vs FROM $src"
+  }.mkString(" UNION ALL ")
+
+  /** Oracle replay of the 60-bit md5 SimHash: the signed vote sums
+    * `v0..v59` over an `h` column, and the fold of those votes into the
+    * fingerprint (bit b set iff v_b > 0).
+    */
+  private def simhashVoteDefs: String = (0 until 60)
+    .map(b => s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b")
+    .mkString(", ")
+  private def simhashFold: String = (0 until 60)
+    .map(b => s"(CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END)")
+    .mkString(" + ")
+
   val qTextStats = Q(
     "q_text_stats",
     (s, dir) => TextOps.textStats(tables(s, dir).documents, "text", "doc_id"),
@@ -138,13 +164,6 @@ object TextQueries {
         shingleSize = 3, numHashes = 16, bands = 4, threshold = 0.5)
     },
     Some {
-      val salts = Dedup.md5Salts.take(16)
-      val sigDefs = salts.zipWithIndex
-        .map { case (s, i) => s"min(xor(h, $s)) AS sig_$i" }.mkString(", ")
-      val bandSelects = (0 until 4).map { b =>
-        val vs = (0 until 4).map(r => s"sig_${b * 4 + r} AS v$r").mkString(", ")
-        s"SELECT doc_id, $b AS band, $vs FROM sig"
-      }.mkString(" UNION ALL ")
       s"""
       WITH corpus AS (
         SELECT doc_id, text FROM documents
@@ -158,8 +177,8 @@ object TextQueries {
         FROM norm, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS u(i)),
       sh AS (SELECT * FROM sh0 WHERE length(shingle) > 0),
       h AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM sh),
-      sig AS (SELECT doc_id, $sigDefs FROM h GROUP BY doc_id),
-      bands AS ($bandSelects),
+      sig AS (SELECT doc_id, ${md5SigDefs(16)} FROM h GROUP BY doc_id),
+      bands AS (${md5BandSelects("sig")}),
       capped AS (SELECT * FROM (
           SELECT *, count(*) OVER (PARTITION BY band, v0, v1, v2, v3) AS sz
           FROM bands) WHERE sz <= 200),
@@ -187,8 +206,7 @@ object TextQueries {
   /** SimHash near-dup detection on a planted corpus — full oracle: the
     * md5 fingerprint, 15-bit chunk candidate join, and hamming verify
     * are all bit-identical in DuckDB, so the COMPLETE near-dup pair set
-    * hash-matches (the 64-bit xxhash production variant stays covered by
-    * TextSpec/StreamingSpec recall gates).
+    * hash-matches.
     */
   val qSimhashDedup = Q(
     "q_simhash_neardup",
@@ -201,12 +219,6 @@ object TextQueries {
       Dedup.simhashNearDuplicatesMd5(corpus, "text", "doc_id", maxHamming = 6)
     },
     Some {
-      val voteDefs = (0 until 60)
-        .map(b => s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b")
-        .mkString(", ")
-      val fold = (0 until 60)
-        .map(b => s"(CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END)")
-        .mkString(" + ")
       s"""
       WITH corpus AS (
         SELECT doc_id, text FROM documents
@@ -217,8 +229,8 @@ object TextQueries {
             FROM corpus),
       h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
             FROM t WHERE length(tok) > 0),
-      v AS (SELECT doc_id, $voteDefs FROM h GROUP BY doc_id),
-      fp AS (SELECT doc_id, CAST($fold AS BIGINT) AS simhash FROM v),
+      v AS (SELECT doc_id, $simhashVoteDefs FROM h GROUP BY doc_id),
+      fp AS (SELECT doc_id, CAST($simhashFold AS BIGINT) AS simhash FROM v),
       c0 AS (SELECT doc_id, simhash, i.i AS chunk,
               (simhash >> (15 * i.i)) & 32767 AS val
             FROM fp CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i) i),
@@ -1873,13 +1885,6 @@ semantic_dedup:
         .withColumn("abs_err", abs(col("est_jaccard") - col("exact_jaccard")))
     },
     Some {
-      val salts = Dedup.md5Salts.take(16)
-      val sigDefs = salts.zipWithIndex
-        .map { case (s, i) => s"min(xor(h, $s)) AS sig_$i" }.mkString(", ")
-      val bandSelects = (0 until 4).map { b =>
-        val vs = (0 until 4).map(r => s"sig_${b * 4 + r} AS v$r").mkString(", ")
-        s"SELECT doc_id, $b AS band, $vs FROM sig"
-      }.mkString(" UNION ALL ")
       val matchSum = (0 until 16)
         .map(i => s"CASE WHEN s1.sig_$i = s2.sig_$i THEN 1 ELSE 0 END")
         .mkString(" + ")
@@ -1896,8 +1901,8 @@ semantic_dedup:
         FROM norm, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS u(i)),
       sh AS (SELECT * FROM sh0 WHERE length(shingle) > 0),
       h AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h FROM sh),
-      sig AS (SELECT doc_id, $sigDefs FROM h GROUP BY doc_id),
-      bands AS ($bandSelects),
+      sig AS (SELECT doc_id, ${md5SigDefs(16)} FROM h GROUP BY doc_id),
+      bands AS (${md5BandSelects("sig")}),
       capped AS (SELECT * FROM (
           SELECT *, count(*) OVER (PARTITION BY band, v0, v1, v2, v3) AS sz
           FROM bands) WHERE sz <= 200),
@@ -1967,13 +1972,6 @@ semantic_dedup:
         .withColumnRenamed("key", "doc_id")
     },
     Some {
-      val salts = Dedup.md5Salts.take(16)
-      val sigDefs = salts.zipWithIndex
-        .map { case (s, i) => s"min(xor(h, $s)) AS sig_$i" }.mkString(", ")
-      def bandSelects(src: String) = (0 until 4).map { b =>
-        val vs = (0 until 4).map(r => s"sig_${b * 4 + r} AS v$r").mkString(", ")
-        s"SELECT doc_id, $b AS band, $vs FROM $src"
-      }.mkString(" UNION ALL ")
       val matchSum = (0 until 16)
         .map(i => s"CASE WHEN cs.sig_$i = ns.sig_$i THEN 1 ELSE 0 END")
         .mkString(" + ")
@@ -1992,19 +1990,19 @@ semantic_dedup:
                FROM cn, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS u(i)),
       ch AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h
              FROM csh0 WHERE length(shingle) > 0),
-      csig AS (SELECT doc_id, $sigDefs FROM ch GROUP BY doc_id),
+      csig AS (SELECT doc_id, ${md5SigDefs(16)} FROM ch GROUP BY doc_id),
       nn AS (SELECT doc_id, str_split($normSql, ' ') AS t FROM newb),
       nsh0 AS (SELECT DISTINCT doc_id,
                  array_to_string(t[CAST(i AS INT):CAST(i AS INT) + 2], ' ') AS shingle
                FROM nn, unnest(range(1, greatest(len(t) - 2, 0) + 1)) AS u(i)),
       nh AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h
              FROM nsh0 WHERE length(shingle) > 0),
-      nsig AS (SELECT doc_id, $sigDefs FROM nh GROUP BY doc_id),
-      cb AS (${bandSelects("csig")}),
+      nsig AS (SELECT doc_id, ${md5SigDefs(16)} FROM nh GROUP BY doc_id),
+      cb AS (${md5BandSelects("csig")}),
       cbc AS (SELECT * FROM (
                 SELECT *, count(*) OVER (PARTITION BY band, v0, v1, v2, v3) AS sz
                 FROM cb) WHERE sz <= 200),
-      nb AS (${bandSelects("nsig")}),
+      nb AS (${md5BandSelects("nsig")}),
       cand AS (SELECT DISTINCT n.doc_id AS new_key, c.doc_id AS idx_key
                FROM nb n JOIN cbc c
                  ON n.band = c.band AND n.v0 = c.v0 AND n.v1 = c.v1
@@ -2036,8 +2034,6 @@ semantic_dedup:
       Dedup.minhashSignaturesMd5(sh, 8).withColumnRenamed("key", "doc_id")
     },
     Some {
-      val sigs = Dedup.md5Salts.take(8).zipWithIndex
-        .map { case (salt, i) => s"min(xor(h, $salt)) AS sig_$i" }.mkString(", ")
       s"""
       WITH toks AS (SELECT doc_id, str_split($normSql, ' ') AS tk FROM documents),
       sh AS (SELECT doc_id, unnest(list_distinct(
@@ -2046,7 +2042,7 @@ semantic_dedup:
         FROM toks),
       h AS (SELECT doc_id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h
             FROM sh WHERE length(shingle) > 0)
-      SELECT doc_id, $sigs FROM h GROUP BY doc_id"""
+      SELECT doc_id, ${md5SigDefs(8)} FROM h GROUP BY doc_id"""
     })
 
   /** SimHash fingerprints under the md5 vote family — bit-exact across
@@ -2058,19 +2054,13 @@ semantic_dedup:
     (s, dir) => Dedup.simhashMd5(tables(s, dir).documents, "text", "doc_id")
       .withColumnRenamed("key", "doc_id"),
     Some {
-      val voteDefs = (0 until 60)
-        .map(b => s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS v$b")
-        .mkString(", ")
-      val fold = (0 until 60)
-        .map(b => s"(CASE WHEN v$b > 0 THEN ${1L << b} ELSE 0 END)")
-        .mkString(" + ")
       s"""
       WITH toks AS (SELECT doc_id,
           unnest(list_distinct(str_split($normSql, ' '))) AS tok FROM documents),
       h AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
             FROM toks WHERE length(tok) > 0),
-      v AS (SELECT doc_id, $voteDefs FROM h GROUP BY doc_id)
-      SELECT doc_id, CAST($fold AS BIGINT) AS simhash FROM v"""
+      v AS (SELECT doc_id, $simhashVoteDefs FROM h GROUP BY doc_id)
+      SELECT doc_id, CAST($simhashFold AS BIGINT) AS simhash FROM v"""
     })
 
   /** Scalar int8 quantization of the embedding column against global

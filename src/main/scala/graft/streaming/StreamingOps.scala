@@ -146,16 +146,17 @@ object StreamingOps {
   final case class NearDupCandidate(key_1: Long, key_2: Long, hamming: Int)
 
   /** Streaming SimHash near-duplicate candidates — the streaming twin of
-    * Dedup.simhashNearDuplicates. Per row the 64-bit signature is
-    * computed locally (SimHashAgg.simhashOfTokens — bit-identical to the
-    * batch aggregate, no per-doc shuffle); each doc fans out to its four
-    * 16-bit chunk buckets (any pair within hamming ≤ 3 shares at least
-    * one chunk), and a per-bucket keyed state holds the signatures seen
-    * inside the watermark horizon. A new doc emits a candidate pair for
-    * every stored signature within `maxHamming`; state is pruned by the
-    * event-time watermark, capped at `maxBucketState` per bucket (the
-    * batch path's skew cap), and dropped wholesale via event-time
-    * timeout once a bucket goes quiet past the horizon.
+    * Dedup.simhashNearDuplicatesMd5. Per row the 60-bit md5 fingerprint
+    * is computed locally (Dedup.simhashMd5Local — bit-identical to the
+    * batch `simhash_votes` aggregate, no per-doc shuffle); each doc fans
+    * out to its four 15-bit chunk buckets (any pair within hamming ≤ 3
+    * shares at least one chunk), and a per-bucket keyed state holds the
+    * signatures seen inside the watermark horizon. A new doc emits a
+    * candidate pair for every stored signature within `maxHamming`;
+    * state is pruned by the event-time watermark, capped at
+    * `maxBucketState` per bucket (the batch path's skew cap), and
+    * dropped wholesale via event-time timeout once a bucket goes quiet
+    * past the horizon.
     *
     * Output is the CANDIDATE pair stream: a pair surfacing through two
     * shared chunks appears twice (dedup downstream — the batch verify
@@ -170,14 +171,11 @@ object StreamingOps {
       maxHamming: Int = 3,
       maxBucketState: Int = 200): Dataset[NearDupCandidate] = {
     import stream.sparkSession.implicits._
-    val sigUdf = udf { text: String =>
-      val toks =
-        if (text == null) Array.empty[String]
-        else graft.functions.TextOps.normalizeTextString(text).split(" ").filter(_.nonEmpty)
-      graft.plans.SimHashAgg.simhashOfTokens(toks.iterator)
-    }
-    val chunkCols = (0 until 4).map(i =>
-      shiftrightunsigned(col("__sig"), i * 16).bitwiseAND(lit(0xFFFFL)) + lit(i * 65536L))
+    val sigUdf = udf { text: String => graft.functions.Dedup.simhashMd5Local(text) }
+    val bits = graft.functions.Dedup.simhashChunkBits
+    val chunkCols = (0 until graft.functions.Dedup.simhashChunks).map(i =>
+      shiftrightunsigned(col("__sig"), i * bits).bitwiseAND(lit((1L << bits) - 1)) +
+        lit(i.toLong << bits))
     val fanned = stream
       .withColumn("__sig", sigUdf(col(textCol)))
       .withWatermark(tsCol, s"$watermarkMs milliseconds")
@@ -248,7 +246,7 @@ object StreamingOps {
       bands: Int = 4,
       maxBucketState: Int = 200): Dataset[MinhashCandidate] = {
     import stream.sparkSession.implicits._
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    graft.functions.Dedup.checkBanding(numHashes, bands)
     val rowsPerBand = numHashes / bands
     val bucketsUdf = udf { text: String =>
       val sig = graft.functions.Dedup.minhashSignatureMd5Local(text, shingleSize, numHashes)
@@ -463,9 +461,7 @@ object StreamingOps {
       numHashes: Int = 16,
       bands: Int = 4,
       threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    require(numHashes <= graft.functions.Dedup.md5Salts.size,
-      s"at most ${graft.functions.Dedup.md5Salts.size} md5 family members")
+    graft.functions.Dedup.checkBanding(numHashes, bands)
     graft.functions.Dedup.validateIndex(index, shingleSize, numHashes, bands)
     val rowsPerBand = numHashes / bands
     val sigUdf = udf { text: String =>
@@ -871,7 +867,7 @@ object StreamingOps {
       threshold: Double = 0.7,
       windowDuration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+    graft.functions.Dedup.checkBanding(numHashes, bands)
     graft.functions.Dedup.validateIndex(index, shingleSize, numHashes, bands)
     val rowsPerBand = numHashes / bands
     val sigUdf = udf { text: String =>

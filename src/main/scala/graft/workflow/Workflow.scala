@@ -440,6 +440,7 @@ object Workflow {
         val index = ic.str("index_path")
         val (shingle, hashes) = (ic.int("shingle_size", 3), ic.int("num_hashes", 16))
         val (bands, thr) = (ic.int("bands", 4), ic.double("threshold", 0.7))
+        Dedup.checkBanding(hashes, bands)
         (frame, idCol) => {
           val df = Dedup.materialize(frame)
           val flagged = Dedup.dedupAgainstIndexMd5(df, spark.read.parquet(index), textCol, idCol,
@@ -460,6 +461,7 @@ object Workflow {
         val path = bc.str("path")
         val (shingle, hashes) = (bc.int("shingle_size", 3), bc.int("num_hashes", 16))
         val (bands, cap) = (bc.int("bands", 4), bc.int("max_bucket_size", 200))
+        Dedup.checkBanding(hashes, bands)
         (frame, idCol) => {
           val df = Dedup.materialize(frame)
           val fresh = Dedup.minhashIndexMd5(df, textCol, idCol,

@@ -1037,7 +1037,7 @@ class StreamingSpec extends SparkSpec {
           java.sql.Timestamp.valueOf("2024-01-01 10:01:00")))
       q.processAllAvailable()
       input.addData( // near-dup (here: identical text, hamming 0 — a short
-        // doc with even one token changed flips > 3 of the 64 vote bits,
+        // doc with even one token changed flips > 3 of the 60 vote bits,
         // so the deterministic planted pair uses an exact copy) of doc 1
         // arriving in a LATER batch: found via bucket state, not a join
         (3L, base, java.sql.Timestamp.valueOf("2024-01-01 10:10:00")))
@@ -1050,11 +1050,10 @@ class StreamingSpec extends SparkSpec {
         s"unrelated doc flagged: ${pairs.toSeq}")
       // the row-local signature equals the batch simhash aggregate
       import spark.implicits._
-      val batchSig = graft.functions.Dedup.simhash(
+      val batchSig = graft.functions.Dedup.simhashMd5(
         Seq((1L, base)).toDF("doc_id", "text"), "text", "doc_id")
         .collect()(0).getLong(1)
-      val rowSig = graft.plans.SimHashAgg.simhashOfTokens(
-        graft.functions.TextOps.normalizeTextString(base).split(" ").filter(_.nonEmpty).iterator)
+      val rowSig = graft.functions.Dedup.simhashMd5Local(base)
       assert(batchSig == rowSig)
     } finally q.stop()
   }

@@ -156,9 +156,54 @@ class TextSpec extends SparkSpec {
   test("simhash: identical texts at hamming 0, near texts close") {
     val t = "one two three four five six seven eight nine ten"
     val d = Seq((1L, t), (2L, t), (3L, t + " eleven")).toDF("doc_id", "text")
-    val pairs = Dedup.simhashNearDuplicates(d, "text", "doc_id", maxHamming = 10)
+    val pairs = Dedup.simhashNearDuplicatesMd5(d, "text", "doc_id", maxHamming = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(p => (p._1, p._2))
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0))
+  }
+
+  test("bad MinHash banding fails naming the parameter, before any Spark job") {
+    import spark.implicits._
+    // (numHashes, bands, the parameter the error must name)
+    val cases = Seq((16, 0, "bands"), (0, 4, "numHashes"), (64, 8, "numHashes"), (16, 3, "bands"))
+    val d = Seq((1L, "one two three four five")).toDF("doc_id", "text")
+    val missing = java.nio.file.Files.createTempDirectory("banding").toString + "/absent"
+    val group = "banding-no-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, group)
+    try cases.foreach { case (h, b, param) =>
+      def rejects(what: String)(f: => Any): Unit = {
+        val err = intercept[IllegalArgumentException](f)
+        assert(err.getMessage.contains(param), s"$what ($h, $b): ${err.getMessage}")
+      }
+      rejects("checkBanding")(Dedup.checkBanding(h, b))
+      rejects("minhashNearDuplicates")(Dedup.minhashNearDuplicates(d, "text", "doc_id",
+        numHashes = h, bands = b))
+      // the input path does not exist: reading it would fail differently,
+      // so the workflow must reject the banding while building its steps
+      Seq(s"build_dedup_index: {path: \"$missing/idx\", num_hashes: $h, bands: $b}",
+          s"dedup_against_index: {index_path: \"$missing/idx\", num_hashes: $h, bands: $b}")
+        .foreach { arm =>
+          rejects(arm)(graft.workflow.Workflow.run(spark, s"""
+input_dataset:
+  read_dataset:
+    file_path: "$missing"
+    file_type: parquet
+text_pipeline:
+  id_col: doc_id
+  $arm
+"""))
+        }
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"${jobs.get} Spark job(s) ran before the rejection")
   }
 
   test("brute-force cosine top-k ranks by similarity") {
