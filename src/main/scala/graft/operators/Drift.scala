@@ -28,36 +28,30 @@ object Drift {
     // ref drift_detector.py:32,187-211: per-side sample cap (default 100k)
     val source = QualityChecker.sampleCapped(source0, sampleCap)
     val target = QualityChecker.sampleCapped(target0, sampleCap)
-    val exprs = cols.flatMap(c => Seq(
-      min(col(c)).cast("double").as(s"min__$c"),
-      max(col(c)).cast("double").as(s"max__$c")))
-    val row = source.agg(exprs.head, exprs.tail: _*).collect()(0)
-    val cuts: Map[String, Seq[Double]] = cols.flatMap { c =>
-      // all-null source column → NULL min/max: drop it from the drift set
-      (Transformers.optD(row, s"min__$c"), Transformers.optD(row, s"max__$c")) match {
-        case (Some(lo), Some(hi)) =>
-          Some(c -> (1 until binCount).map(i => lo + (hi - lo) * i / binCount))
-        case _ => None
-      }
-    }.toMap
-
-    val kept = cols.filter(cuts.contains)
-    require(kept.nonEmpty, "driftStatistics: every requested column is all-null in the source")
-    def binnedLong(df: DataFrame, freqName: String): DataFrame = {
-      val b = Transformers.applyBinning(df, cuts, "__bin")
-      val stackArgs = kept.map(c => s"'$c', `${c}__bin`").mkString(", ")
-      b.select(expr(s"stack(${kept.size}, $stackArgs) as (attribute, bin)"))
-        .groupBy("attribute", "bin")
-        .agg(count(lit(1)).as("__n"))
-        .withColumn(freqName,
-          col("__n") / sum(col("__n")).over(Window.partitionBy("attribute")))
-        .drop("__n")
-    }
-
-    val p = binnedLong(source, "p")
-    val q = binnedLong(target, "q")
-    metricsFromFrequencies(p, q, threshold)
+    val cuts = Transformers.equalRangeCuts(source, cols, binCount)
+    metricsFromFrequencies(
+      binFrequencies(source, cuts, "p"), binFrequencies(target, cuts, "q"), threshold)
   }
+
+  /** The one bin-frequency kernel, [attribute, bin, `name`]: bin every
+    * column of `cuts`, melt to (attribute, bin), count, divide by the
+    * attribute's total — one shuffle. Both sides of the direct and the
+    * persisted-source drift paths are built here.
+    */
+  def binFrequencies(df: DataFrame, cuts: Map[String, Seq[Double]], name: String): DataFrame = {
+    require(cuts.nonEmpty, "drift: every requested column is all-null in the source")
+    val stackArgs = cuts.keys.map(c => s"'$c', `${c}__bin`").mkString(", ")
+    shareOfAttribute(Transformers.applyBinning(df, cuts, "__bin")
+      .select(expr(s"stack(${cuts.size}, $stackArgs) as (attribute, bin)"))
+      .groupBy("attribute", "bin")
+      .agg(count(lit(1)).as("__n")), name)
+  }
+
+  /** [attribute, bin, __n] counts → [attribute, bin, `name`] frequencies. */
+  private[graft] def shareOfAttribute(counts: DataFrame, name: String): DataFrame =
+    counts
+      .withColumn(name, col("__n") / sum(col("__n")).over(Window.partitionBy("attribute")))
+      .drop("__n")
 
   /** PSI/HD/JSD/KS from per-bin frequency frames [attribute, bin, p|q] —
     * shared by the direct path and the persisted-source path

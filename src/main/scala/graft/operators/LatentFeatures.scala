@@ -745,7 +745,8 @@ object LatentFeatures {
     // exact medians via the histogram-selection path (the `percentile`
     // aggregate builds a boxed value→count map — near-unique money
     // columns made it the dominant cost of this whole harness); values
-    // are identical to quantile_cont, so the oracle is unaffected
+    // equal Spark's `percentile` and match quantile_cont except, rarely,
+    // in the last bit (the two engines interpolate differently)
     val medRow = StatsGenerator.exactPercentiles(
       masked.select(obsA.as("__oa"), obsB.as("__ob")), Seq("__oa", "__ob"), Seq(0.5))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](4).head).toMap

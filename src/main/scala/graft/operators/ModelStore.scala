@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.operators.QualityChecker.OutlierBounds
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.broadcast
 
 /** Fit-state persistence — the reference's pre_existing_model contract
   * (small parquet "param tables" per transformer: binning cutoffs
@@ -86,6 +86,7 @@ object ModelStore {
 
   /** Persist the source-side binned frequencies + cutoffs so future
     * drift checks never rescan the source (ref drift "pre_existing_source").
+    * Same fit and kernel as Drift.driftStatistics, without its sample cap.
     */
   def saveDriftSource(
       spark: SparkSession,
@@ -93,29 +94,10 @@ object ModelStore {
       cols: Seq[String],
       binCount: Int,
       path: String): Unit = {
-    val exprs = cols.flatMap(c => Seq(
-      min(col(c)).cast("double").as(s"min__$c"),
-      max(col(c)).cast("double").as(s"max__$c")))
-    val row = source.agg(exprs.head, exprs.tail: _*).collect()(0)
-    val cuts = cols.flatMap { c =>
-      // all-null source column → NULL min/max: skip it (same guard as
-      // Drift.driftStatistics)
-      (Transformers.optD(row, s"min__$c"), Transformers.optD(row, s"max__$c")) match {
-        case (Some(lo), Some(hi)) =>
-          Some(c -> (1 until binCount).map(i => lo + (hi - lo) * i / binCount))
-        case _ => None
-      }
-    }.toMap
+    val cuts = Transformers.equalRangeCuts(source, cols, binCount)
     saveBinning(spark, cuts, s"$path/cuts")
-    val binned = Transformers.applyBinning(source, cuts, "__bin")
-    val stackArgs = cols.map(c => s"'$c', `${c}__bin`").mkString(", ")
-    val p = binned
-      .select(expr(s"stack(${cols.size}, $stackArgs) as (attribute, bin)"))
-      .groupBy("attribute", "bin").agg(count(lit(1)).as("__n"))
-      .withColumn("p", col("__n") /
-        sum(col("__n")).over(org.apache.spark.sql.expressions.Window.partitionBy("attribute")))
-      .drop("__n")
-    p.coalesce(1).write.mode("overwrite").parquet(s"$path/frequencies")
+    Drift.binFrequencies(source, cuts, "p")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/frequencies")
   }
 
   /** Drift of a target against a persisted source histogram — no source
@@ -125,20 +107,11 @@ object ModelStore {
       spark: SparkSession,
       target: DataFrame,
       path: String,
-      threshold: Double = 0.1): DataFrame = {
-    val cuts = loadBinning(spark, s"$path/cuts")
-    val cols = cuts.keys.toSeq.sorted
-    val p = spark.read.parquet(s"$path/frequencies")
-    val binned = Transformers.applyBinning(target, cuts, "__bin")
-    val stackArgs = cols.map(c => s"'$c', `${c}__bin`").mkString(", ")
-    val q = binned
-      .select(expr(s"stack(${cols.size}, $stackArgs) as (attribute, bin)"))
-      .groupBy("attribute", "bin").agg(count(lit(1)).as("__n"))
-      .withColumn("q", col("__n") /
-        sum(col("__n")).over(org.apache.spark.sql.expressions.Window.partitionBy("attribute")))
-      .drop("__n")
-    Drift.metricsFromFrequencies(p, q, threshold)
-  }
+      threshold: Double = 0.1): DataFrame =
+    Drift.metricsFromFrequencies(
+      spark.read.parquet(s"$path/frequencies"),
+      Drift.binFrequencies(target, loadBinning(spark, s"$path/cuts"), "q"),
+      threshold)
 
   // ---- tokenizer fit tables: train once on the big corpus, save the
   //      vocab-sized model, encode anywhere (including a streaming

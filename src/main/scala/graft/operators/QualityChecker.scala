@@ -273,7 +273,7 @@ object QualityChecker {
     // approx=true reproduces the reference numerically: it fits bounds on
     // Greenwald-Khanna sketches (approxQuantile, relativeError 0.01 — ref
     // quality_checker.py:847,882), the 100 TB single-pass posture; the
-    // default exact path uses one shared percentile buffer per column.
+    // default exact path runs StatsGenerator.exactPercentilesWith.
     // Quantiles never ride the `percentile` aggregate: approx mode uses GK
     // sketches, the exact path uses StatsGenerator.exactPercentiles'
     // histogram selection — both avoid the boxed value→count map that

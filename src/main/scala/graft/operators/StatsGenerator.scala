@@ -421,8 +421,8 @@ object StatsGenerator {
     * bucket still holds > `collectCap` values (each round shrinks
     * intervals ×B, so ≥ 10¹² rows resolve in 2 rounds at B = 8192);
     * (2) one final scan collects only the ≤ collectCap values in each
-    * target bucket; the driver sorts those and interpolates
-    * quantile_cont at p·(n−1).
+    * target bucket; the driver sorts those and interpolates at p·(n−1)
+    * with the arithmetic of Spark's `percentile` aggregate.
     *
     * Skew/constant columns can keep a bucket > cap forever (one value
     * repeated billions of times) — the histogram also tracks per-bucket
@@ -656,10 +656,15 @@ object StatsGenerator {
         val n = nArr(j)
         if (n == 0L) (c, 0L, None, None, None)
         else {
+          // Spark `percentile`'s interpolation (PercentileBase.getPercentile):
+          // the weighted form, not vLo + frac * (vHi - vLo), which rounds
+          // differently in the last bit
           val qs = rankPos(j).toSeq.map { pos =>
-            val vLo = resolved((j, math.floor(pos).toLong))
-            val vHi = resolved((j, math.ceil(pos).toLong))
-            vLo + (pos - math.floor(pos)) * (vHi - vLo)
+            val (lo, hi) = (math.floor(pos), math.ceil(pos))
+            val vLo = resolved((j, lo.toLong))
+            val vHi = resolved((j, hi.toLong))
+            if (lo == hi || vLo == vHi) vLo
+            else (hi - pos) * vLo + (pos - lo) * vHi
           }
           (c, n, Some(mnArr(j)), Some(mxArr(j)), Some(qs))
         }

@@ -37,34 +37,40 @@ object Transformers {
       outputSuffix: String = "_binned"): DataFrame = {
     require(binCount >= 2, "need at least 2 bins")
     val cuts: Map[String, Seq[Double]] = method match {
-      case "equal_range" =>
-        val exprs = cols.flatMap(c => Seq(min(col(c)).cast(DoubleType).as(s"min__$c"),
-          max(col(c)).cast(DoubleType).as(s"max__$c")))
-        val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-        cols.flatMap { c =>
-          // all-null column → NULL min/max: skip it rather than NPE
-          (optD(row, s"min__$c"), optD(row, s"max__$c")) match {
-            case (Some(lo), Some(hi)) =>
-              Some(c -> (1 until binCount).map(i => lo + (hi - lo) * i / binCount))
-            case _ => None
-          }
-        }.toMap
+      case "equal_range" => equalRangeCuts(df, cols, binCount)
       case "equal_frequency" =>
         val probs = (1 until binCount).map(_.toDouble / binCount)
-        if (approx) {
-          // one pass for ALL columns (GK sketches built together)
-          val qs = df.stat.approxQuantile(cols.toArray, probs.toArray, 0.01)
-          cols.zip(qs.map(_.toSeq)).toMap
-        } else {
-          // one agg, one shared percentile buffer per column
-          val exprs = cols.map(c => NumExpr.pcts(col(c), probs).as(s"q__$c"))
-          val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-          cols.flatMap(c => Option(row.getAs[scala.collection.Seq[Double]](s"q__$c"))
-            .map(qs => c -> qs.toSeq)).toMap
-        }
+        // approx: one pass for ALL columns (GK sketches built together)
+        if (approx) cols.zip(df.stat.approxQuantile(cols.toArray, probs.toArray, 0.01).map(_.toSeq)).toMap
+        else exactQuantiles(df, cols, probs)
       case m => throw new IllegalArgumentException(s"unknown binning method: $m")
     }
     applyBinning(df, cuts, outputSuffix)
+  }
+
+  /** One min/max aggregate over `cols`; all-null columns are left out. */
+  private def minMax(df: DataFrame, cols: Seq[String]): Seq[(String, Double, Double)] = {
+    val exprs = cols.flatMap(c => Seq(min(col(c)).cast(DoubleType).as(s"min__$c"),
+      max(col(c)).cast(DoubleType).as(s"max__$c")))
+    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
+    for (c <- cols; lo <- optD(row, s"min__$c"); hi <- optD(row, s"max__$c")) yield (c, lo, hi)
+  }
+
+  /** The one equal-range fit (binning, drift, saved drift sources, report
+    * charts): interior cutoffs lo + (hi - lo) * i / binCount per column.
+    */
+  def equalRangeCuts(df: DataFrame, cols: Seq[String], binCount: Int): Map[String, Seq[Double]] =
+    minMax(df, cols).map { case (c, lo, hi) =>
+      c -> (1 until binCount).map(i => lo + (hi - lo) * i / binCount)
+    }.toMap
+
+  /** Exact quantiles at `probs` in one aggregate; all-null columns are left out. */
+  private def exactQuantiles(
+      df: DataFrame, cols: Seq[String], probs: Seq[Double]): Map[String, Seq[Double]] = {
+    val exprs = cols.map(c => NumExpr.pcts(col(c), probs).as(s"q__$c"))
+    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
+    cols.flatMap(c => Option(row.getAs[scala.collection.Seq[Double]](s"q__$c"))
+      .map(qs => c -> qs.toSeq)).toMap
   }
 
   /** Bin with precomputed interior cutoffs: value in (-inf,c1]→1, …,
@@ -110,10 +116,7 @@ object Transformers {
       (2 to maxBins).flatMap(k => (1 until k).map(_.toDouble / k)).distinct.sorted
     val gridVals: Seq[Double] =
       if (approx) df.stat.approxQuantile(colName, allProbs.toArray, 0.01).toSeq
-      else {
-        val r = df.agg(NumExpr.pcts(col(colName), allProbs).as("q")).collect()(0)
-        Option(r.getAs[scala.collection.Seq[Double]]("q")).map(_.toSeq).getOrElse(Seq.empty)
-      }
+      else exactQuantiles(df, Seq(colName), allProbs).getOrElse(colName, Seq.empty)
     if (gridVals.isEmpty) return df // all-null / empty column: nothing to bin
     val probAt: Map[Double, Double] = allProbs.zip(gridVals).toMap
     def cutsFor(k: Int): Seq[Double] = (1 until k).map(i => probAt(i.toDouble / k))
@@ -171,10 +174,9 @@ object Transformers {
     * (x − P50) / (P75 − P25), exact percentiles in one agg.
     */
   def iqrStandardization(df: DataFrame, cols: Seq[String], roundScale: Int = 4): DataFrame = {
-    val exprs = cols.map(c => NumExpr.pcts(col(c), Seq(0.25, 0.50, 0.75)).as(s"q__$c"))
-    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
+    val quartiles = exactQuantiles(df, cols, Seq(0.25, 0.50, 0.75))
     cols.foldLeft(df) { (d, c) =>
-      Option(row.getAs[scala.collection.Seq[Double]](s"q__$c")) match {
+      quartiles.get(c) match {
         case Some(qs) if qs(2) - qs(0) != 0 && !(qs(2) - qs(0)).isNaN =>
           d.withColumn(c, round((col(c) - qs(1)) / (qs(2) - qs(0)), roundScale))
         case _ => d
@@ -186,18 +188,10 @@ object Transformers {
     * pure Catalyst arithmetic; the reference round-tripped through
     * VectorAssembler + MinMaxScaler + an rdd re-zip.
     */
-  def normalization(df: DataFrame, cols: Seq[String], roundScale: Int = 6): DataFrame = {
-    val exprs = cols.flatMap(c => Seq(min(col(c)).cast(DoubleType).as(s"min__$c"),
-      max(col(c)).cast(DoubleType).as(s"max__$c")))
-    val row = df.agg(exprs.head, exprs.tail: _*).collect()(0)
-    cols.foldLeft(df) { (d, c) =>
-      (optD(row, s"min__$c"), optD(row, s"max__$c")) match {
-        case (Some(lo), Some(hi)) if hi != lo =>
-          d.withColumn(c, round((col(c) - lo) / (hi - lo), roundScale))
-        case _ => d
-      }
+  def normalization(df: DataFrame, cols: Seq[String], roundScale: Int = 6): DataFrame =
+    minMax(df, cols).foldLeft(df) { case (d, (c, lo, hi)) =>
+      if (hi != lo) d.withColumn(c, round((col(c) - lo) / (hi - lo), roundScale)) else d
     }
-  }
 
   // ---------------------------------------------------------------- encoding
 

@@ -137,11 +137,8 @@ object StatsQueries {
     "q_report_frequency_chart",
     (s, dir) => {
       val li = tables(s, dir).lineitem
-      val row = li.agg(min(col("l_quantity")).cast("double"),
-        max(col("l_quantity")).cast("double")).first()
-      val (lo, hi) = (row.getDouble(0), row.getDouble(1))
-      val cuts = (1 until 10).map(i => lo + (hi - lo) * i / 10)
-      graft.operators.BasicReport.frequencyChartData(li, "l_quantity", Some(cuts))
+      val cuts = graft.operators.Transformers.equalRangeCuts(li, Seq("l_quantity"), 10)
+      graft.operators.BasicReport.frequencyChartData(li, "l_quantity", Some(cuts("l_quantity")))
     },
     Some {
       val lab = (i: Int) =>

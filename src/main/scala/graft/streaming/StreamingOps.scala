@@ -766,7 +766,12 @@ object StreamingOps {
       cuts: Seq[Double],
       windowDuration: String = "1 hour",
       watermark: String = "2 hours"): DataFrame =
-    stream.withWatermark(tsCol, watermark)
+    windowedBinCounts(stream.withWatermark(tsCol, watermark), tsCol, valueCol, cuts, windowDuration)
+
+  /** [window, bin, n]: the windowed bin count under both drift streams. */
+  private def windowedBinCounts(stream: DataFrame, tsCol: String, valueCol: String,
+      cuts: Seq[Double], windowDuration: String): DataFrame =
+    stream
       .withColumn("bin", graft.operators.Transformers.binExpr(col(valueCol), cuts))
       .groupBy(window(col(tsCol), windowDuration), col("bin"))
       .agg(count(lit(1)).as("n"))
@@ -782,11 +787,10 @@ object StreamingOps {
       binCounts: DataFrame,
       sourceFreq: DataFrame,
       threshold: Double = 0.1): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("attribute")
-    val q = binCounts
-      .withColumn("attribute", col("window.start").cast("string"))
-      .withColumn("q", col("n") / sum("n").over(w))
-      .select("attribute", "bin", "q")
+    val q = graft.operators.Drift.shareOfAttribute(
+      binCounts.select(
+        col("window.start").cast("string").as("attribute"), col("bin"), col("n").as("__n")),
+      "q")
     val windows = q.select("attribute").distinct()
     val p = sourceFreq.select(col("bin"), col("p")).crossJoin(broadcast(windows))
     graft.operators.Drift.metricsFromFrequencies(p, q, threshold)
@@ -808,10 +812,7 @@ object StreamingOps {
       windowDuration: String = "1 hour",
       threshold: Double = 0.1)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream
-      .withColumn("bin", graft.operators.Transformers.binExpr(col(valueCol), cuts))
-      .groupBy(window(col(tsCol), windowDuration), col("bin"))
-      .agg(count(lit(1)).as("n"))
+    windowedBinCounts(stream, tsCol, valueCol, cuts, windowDuration)
       .writeStream
       .outputMode(OutputMode.Complete())
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -68,12 +68,19 @@ class DriftSpec extends SparkSpec {
     import graft.operators.ModelStore
     val src = (1 to 500).map(_.toDouble).toDF("x")
     val tgt = (1 to 500).map(i => i.toDouble + 100).toDF("x")
-    val direct = Drift.driftStatistics(src, tgt, Seq("x")).collect()(0)
-    val dir = java.nio.file.Files.createTempDirectory("drift_model").toString
-    ModelStore.saveDriftSource(spark, src, Seq("x"), binCount = 10, dir)
-    val saved = ModelStore.driftAgainstSavedSource(spark, tgt, dir).collect()(0)
-    Seq("PSI", "HD", "JSD", "KS").foreach { m =>
-      assert(saved.getDouble(saved.fieldIndex(m)) == direct.getDouble(direct.fieldIndex(m)), m)
+    // a second, all-null source column has no cuts and drops out of both paths
+    val nul = org.apache.spark.sql.functions.lit(null).cast("double")
+    for ((source, target, cols) <- Seq((src, tgt, Seq("x")),
+        (src.withColumn("y", nul), tgt.withColumn("y", nul), Seq("x", "y")))) {
+      val direct = Drift.driftStatistics(source, target, cols).collect()
+      val dir = java.nio.file.Files.createTempDirectory("drift_model").toString
+      ModelStore.saveDriftSource(spark, source, cols, binCount = 10, dir)
+      val saved = ModelStore.driftAgainstSavedSource(spark, target, dir).collect()
+      assert(saved.length == 1 && direct.length == 1, cols)
+      Seq("PSI", "HD", "JSD", "KS").foreach { m =>
+        assert(saved(0).getDouble(saved(0).fieldIndex(m)) ==
+          direct(0).getDouble(direct(0).fieldIndex(m)), s"$cols $m")
+      }
     }
   }
 

@@ -222,10 +222,21 @@ class StatsSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("x"),
       StatsGenerator.percentilePoints).as("q")).collect()(0).getSeq[Double](0)
     val got = out("x").getSeq[Double](4)
-    got.zip(want).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9, s"$a vs $b") }
+    assert(got == want)
     assert(out("x").getLong(1) == 2500L)
     assert(out("const").getSeq[Double](4).forall(_ == 42.0))
     assert(out("allnull").getLong(1) == 0L && out("allnull").isNullAt(4))
+  }
+
+  test("histogram selection interpolates like the percentile aggregate") {
+    // (1 - f) * lo + f * hi, the form of Spark's `percentile` and of
+    // DuckDB's quantile_cont; lo + f * (hi - lo) gives 0.4 here
+    val d = Seq(0.1, 0.7).toDF("x")
+    val got = StatsGenerator.exactPercentiles(d, Seq("x"), Seq(0.5))
+      .collect()(0).getSeq[Double](4).head
+    val want = d.select(graft.core.NumExpr.pcts(
+      org.apache.spark.sql.functions.col("x"), Seq(0.5)).as("q")).collect()(0).getSeq[Double](0).head
+    assert(got == 0.39999999999999997 && got == want, s"$got vs $want")
   }
 
   test("fused extras on the percentile scan equal a standalone aggregate") {
