@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Graph centrality over edge frames — the domain-authority signal
   * web-corpus pipelines rank URLs/hosts with (CommonCrawl publishes
@@ -11,18 +12,21 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Plan-audit probe (plans/r20): when set, receives each iterative
-    * op's final PRE-checkpoint frame, whose plan shows the last sweep's
-    * true shape (Exchange count, join strategy) that the eager
-    * localCheckpoint otherwise truncates from the returned frame.
-    * Never set outside graft.Explain.
+  /** The one sweep loop of the iterative graph ops: runs `step` for
+    * rounds 1..`rounds`, round r reading round r−1's frame (`init`
+    * first), and localCheckpoints round r's frame when
+    * `r % every == 0 || r == rounds`. The checkpoints truncate lineage
+    * (an iterative plan grows one sweep deeper per round, and the
+    * optimizer re-analyzes the whole history each time); the last one
+    * materializes the result, so callers may release the cached inputs
+    * its plan reads. Each op passes its measured cadence as a literal.
     */
-  private[graft] var planProbe: DataFrame => Unit = null
-  private def probe(df: DataFrame): DataFrame = {
-    val p = planProbe
-    if (p != null) p(df)
-    df
-  }
+  private[graft] def sweep(init: DataFrame, rounds: Int, every: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init) { (cur, r) =>
+      val next = step(cur, r)
+      if (r % every == 0 || r == rounds) next.localCheckpoint() else next
+    }
 
   /** Fixed-iteration PageRank over (src, dst) edges, treated as a
     * weighted multigraph (duplicate edges carry multiplicity).
@@ -30,20 +34,17 @@ object Graph {
     * rank = (1−d)/N + d·Σ_in rank/outdeg. Fixed iteration count (not a
     * convergence test) keeps the result a pure function of the edges —
     * replayable by any engine (q_pagerank unrolls the same sweeps in
-    * SQL CTEs).
+    * SQL CTEs). An empty edge frame has no node to rank and fails.
     *
     * Scale: each sweep shuffles the edge frame once (join on src) and
     * aggregates contributions on dst — the canonical 2-shuffle
-    * iteration. `checkpointEvery` truncates lineage (iterative plans
-    * grow linearly deep; localCheckpoint keeps the optimizer from
-    * re-analyzing the whole history each sweep). It defaults to every
-    * THIRD sweep: the truncated rank frame is node-sized (tiny next to
-    * the edges), letting the plan nest measured 1.6-2.4× slower even at
-    * 5 iterations (`ck=2` 2.2 s vs `ck=0` 3.5-6.9 s at sf0.1, r12); the
+    * iteration. The [[sweep]] checkpoints every THIRD sweep: the
+    * truncated rank frame is node-sized (tiny next to the edges),
+    * letting the plan nest measured 1.6-2.4× slower even at 5
+    * iterations (`ck=2` 2.2 s vs `ck=0` 3.5-6.9 s at sf0.1, r12); the
     * r20 leaner sweeps (fused outdeg, union-seeded aggregate) tilt the
     * balance one notch lazier (`ck=3` ~7.5 s vs `ck=2` ~8.6 s for the
-    * 3-query pagerank family, median of 5). Pass 0 to keep the whole
-    * run one lazy plan.
+    * 3-query pagerank family, median of 5).
     * Dangling nodes (no out-edges) simply contribute nothing — supply
     * symmetric edges if mass conservation matters.
     */
@@ -74,8 +75,6 @@ object Graph {
       dstCol: String = "dst",
       iterations: Int = 5,
       damping: Double = 0.85,
-      checkpointEvery: Int = 3,
-      broadcastRanks: Boolean = false,
       saltDegreeThreshold: Int = 0,
       saltFactor: Int = 16,
       weightCol: String = ""): DataFrame = {
@@ -86,13 +85,10 @@ object Graph {
     require(saltDegreeThreshold <= 0 || saltFactor >= 1,
       s"saltFactor must be >= 1 when salting is enabled, got $saltFactor")
     val weighted = weightCol.nonEmpty
-    val (e0, nodes) = edgeNodeFrames(
-      if (weighted) edges.withColumn("__w", col(weightCol).cast("double"))
-      else edges, srcCol, dstCol,
-      extraCols = if (weighted) Seq("__w") else Nil)
-    val deg = if (weighted) e0.groupBy("src").agg(sum(col("__w")).as("outdeg"))
-              else e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val (e0, nodes, deg, contrib) = rankEdges(edges, srcCol, dstCol, weightCol)
     val n = nodes.count()
+    // the 1/N seed would divide by zero (ANSI) on an edgeless graph
+    require(n > 0, s"pageRank needs at least one edge: the edge frame ($srcCol, $dstCol) is empty")
     val base = lit(1.0) - lit(damping)
     val salted = saltDegreeThreshold > 0
     // hub set is static across sweeps: mark it once, broadcast (the
@@ -119,42 +115,29 @@ object Graph {
         .withColumn("__salt",
           when(col("__hub"), pmod(hash(col("dst")), lit(saltFactor))).otherwise(lit(0)))
         .drop("__hub").persist()
-    // broadcastRanks trades per-sweep driver broadcast builds of the
-    // NODE-sized rank/degree tables for an unshuffled edge frame — a
-    // win only when edges ≫ nodes (huge-corpus host graphs); on the
-    // test graph the reused shuffle exchanges measured ~25% FASTER, so
-    // the default stays false
-    def maybeBc(df: DataFrame): DataFrame = if (broadcastRanks) broadcast(df) else df
     // static zero seed: one 0.0 row per node folded into each sweep's
     // contribution sum replaces the former per-sweep `nodes ⟕ contribs`
     // join (one join + sort fewer per sweep; adding 0.0 to a double sum
     // is value-identical to the coalesce(s, 0.0) it replaces, and a
     // node with no in-edges still gets its row from the seed)
     val zeroSeed = nodes.select(col("node"), lit(0.0).as("c"))
-    var ranks = nodes.withColumn("rank", lit(1.0) / lit(n.toDouble))
-    for (it <- 1 to iterations) {
-      val rankSrc = ranks.withColumnRenamed("node", "src")
-      val rankSalted =
-        if (!salted) rankSrc
-        else rankSrc.join(broadcast(hubs), Seq("src"), "left")
-          .withColumn("__salt", explode(
-            when(col("__hub"), sequence(lit(0), lit(saltFactor - 1)))
-              .otherwise(array(lit(0)))))
-          .drop("__hub")
-      ranks = e
-        .join(maybeBc(rankSalted), if (salted) Seq("src", "__salt") else Seq("src"))
-        .select(col("dst").as("node"),
-          (if (weighted) col("rank") * col("__w") / col("outdeg")
-           else col("rank") / col("outdeg")).as("c"))
-        .unionByName(zeroSeed)
-        .groupBy("node").agg(sum("c").as("s"))
-        .select(col("node"),
-          (base / lit(n.toDouble) + lit(damping) * col("s")).as("rank"))
-      if (checkpointEvery > 0 && it % checkpointEvery == 0)
-        ranks = ranks.localCheckpoint()
+    val out = sweep(nodes.withColumn("rank", lit(1.0) / lit(n.toDouble)), iterations, 3) {
+      (ranks, _) =>
+        val rankSrc = ranks.withColumnRenamed("node", "src")
+        val rankSalted =
+          if (!salted) rankSrc
+          else rankSrc.join(broadcast(hubs), Seq("src"), "left")
+            .withColumn("__salt", explode(
+              when(col("__hub"), sequence(lit(0), lit(saltFactor - 1)))
+                .otherwise(array(lit(0)))))
+            .drop("__hub")
+        e.join(rankSalted, if (salted) Seq("src", "__salt") else Seq("src"))
+          .select(col("dst").as("node"), contrib)
+          .unionByName(zeroSeed)
+          .groupBy("node").agg(sum("c").as("s"))
+          .select(col("node"),
+            (base / lit(n.toDouble) + lit(damping) * col("s")).as("rank"))
     }
-    // materialize before releasing the cached inputs the plan reads
-    val out = probe(ranks).localCheckpoint()
     e.unpersist(false)
     e0.unpersist(false); nodes.unpersist(false)
     out
@@ -179,7 +162,7 @@ object Graph {
     *
     * Scale: identical posture to [[pageRank]] — per sweep one edge
     * join + one map-side-combined dst aggregate, node-sized state,
-    * lineage truncated every `checkpointEvery` sweeps; the seed
+    * lineage truncated every third sweep; the seed
     * indicator is one node-sized join (AQE broadcasts small seed
     * sets). Dangling mass is dropped, not redistributed, matching
     * [[pageRank]]'s documented contract.
@@ -191,18 +174,11 @@ object Graph {
       dstCol: String = "dst",
       iterations: Int = 4,
       damping: Double = 0.85,
-      checkpointEvery: Int = 3,
       weightCol: String = ""): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     require(seeds.columns.length == 1,
       s"seeds must have exactly one node-id column, got ${seeds.columns.length}")
-    val weighted = weightCol.nonEmpty
-    val (e0, nodes) = edgeNodeFrames(
-      if (weighted) edges.withColumn("__w", col(weightCol).cast("double"))
-      else edges, srcCol, dstCol,
-      extraCols = if (weighted) Seq("__w") else Nil)
-    val deg = if (weighted) e0.groupBy("src").agg(sum(col("__w")).as("outdeg"))
-              else e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val (e0, nodes, deg, contrib) = rankEdges(edges, srcCol, dstCol, weightCol)
     // The per-sweep operand, built ONCE (guide §2.4, the pageRank
     // reasoning): static outdeg fused onto the edge rows — no per-sweep
     // deg join.
@@ -223,23 +199,16 @@ object Graph {
     val seedZero = nodes.join(base, Seq("node"), "left")
       .select(col("node"), lit(0.0).as("c"),
         coalesce(col("mass"), lit(0.0)).as("m")).persist()
-    var ranks = seedZero.select(col("node"), col("m").as("rank"))
-    for (it <- 1 to iterations) {
-      ranks = e
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          (if (weighted) col("rank") * col("__w") / col("outdeg")
-           else col("rank") / col("outdeg")).as("c"),
-          lit(0.0).as("m"))
-        .unionByName(seedZero)
-        .groupBy("node").agg(sum("c").as("s"), sum("m").as("mm"))
-        .select(col("node"),
-          ((lit(1.0) - lit(damping)) * col("mm") +
-            lit(damping) * col("s")).as("rank"))
-      if (checkpointEvery > 0 && it % checkpointEvery == 0)
-        ranks = ranks.localCheckpoint()
+    val out = sweep(seedZero.select(col("node"), col("m").as("rank")), iterations, 3) {
+      (ranks, _) =>
+        e.join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+          .select(col("dst").as("node"), contrib, lit(0.0).as("m"))
+          .unionByName(seedZero)
+          .groupBy("node").agg(sum("c").as("s"), sum("m").as("mm"))
+          .select(col("node"),
+            ((lit(1.0) - lit(damping)) * col("mm") +
+              lit(damping) * col("s")).as("rank"))
     }
-    val out = probe(ranks).localCheckpoint()
     e.unpersist(false); e0.unpersist(false); nodes.unpersist(false)
     seedSet.unpersist(false); seedZero.unpersist(false)
     out
@@ -329,7 +298,6 @@ object Graph {
       if (barrier) auth = auth.localCheckpoint(false)
       hub = halfSweep(auth, "auth", "dst", "src", "hub")
       if (barrier) {
-        if (it == iterations) hub = probe(hub)
         hub = hub.localCheckpoint()
         // Union concatenates child partitions in order: row 0 is the
         // auth max, row 1 the hub max — one action for both scalars
@@ -370,6 +338,26 @@ object Graph {
     (e0, nodes)
   }
 
+  /** [[pageRank]]/[[personalizedPageRank]] preamble: [[edgeNodeFrames]]
+    * (carrying the double weight `__w` when `weightCol` is set), the
+    * per-src out-degree (total out-weight when weighted), and the
+    * per-edge contribution `c` = rank·w/wout (rank/outdeg unweighted)
+    * over an edge row joined to its degree and its source's rank.
+    */
+  private def rankEdges(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: String): (DataFrame, DataFrame, DataFrame, Column) = {
+    val weighted = weightCol.nonEmpty
+    val (e0, nodes) = edgeNodeFrames(
+      if (weighted) edges.withColumn("__w", col(weightCol).cast("double"))
+      else edges, srcCol, dstCol,
+      extraCols = if (weighted) Seq("__w") else Nil)
+    val deg = if (weighted) e0.groupBy("src").agg(sum(col("__w")).as("outdeg"))
+              else e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val contrib = if (weighted) col("rank") * col("__w") / col("outdeg")
+                  else col("rank") / col("outdeg")
+    (e0, nodes, deg, contrib.as("c"))
+  }
+
   /** Fixed-round k-core peeling over an undirected simple graph — the
     * dense-subgraph signal web/social curation uses to separate tightly
     * linked cores from peripheral tails (spam farms and boilerplate
@@ -400,16 +388,14 @@ object Graph {
       rounds: Int = 5): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "need at least one peel round")
-    var e = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    for (r <- 1 to rounds) {
-      val alive = undirectedDegrees(e).filter(col("deg") >= k).select("node")
-      e = e
-        .join(alive.withColumnRenamed("node", "lo"), Seq("lo"))
-        .join(alive.withColumnRenamed("node", "hi"), Seq("hi"))
-        .select(col("lo"), col("hi"))
-      if (r % 2 == 0 || r == rounds) e = e.localCheckpoint()
+    val core = sweep(canonicalUndirected(edges, srcCol, dstCol).localCheckpoint(), rounds, 2) {
+      (e, _) =>
+        val alive = undirectedDegrees(e).filter(col("deg") >= k).select("node")
+        e.join(alive.withColumnRenamed("node", "lo"), Seq("lo"))
+          .join(alive.withColumnRenamed("node", "hi"), Seq("hi"))
+          .select(col("lo"), col("hi"))
     }
-    undirectedDegrees(e).withColumnRenamed("deg", "core_degree")
+    undirectedDegrees(core).withColumnRenamed("deg", "core_degree")
   }
 
   /** Fixed-round connected components over an undirected simple graph —
@@ -447,14 +433,10 @@ object Graph {
       dstCol: String = "dst",
       rounds: Int = 5): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    // symmetric adjacency, materialized once — every round re-reads it
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint()
-    var lbl = adj.select(col("u").as("node")).distinct()
+    val adj = adjacency(edges, srcCol, dstCol)
+    val init = adj.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("comp"))
-    for (r <- 1 to rounds) {
+    sweep(init, rounds, 2) { (lbl, _) =>
       // propagate: comp(v) := min(comp(v), min over neighbors' comp) —
       // one aggregate over (neighbor labels ∪ own label): folding the
       // node's own label into the min replaces the former separate
@@ -468,15 +450,12 @@ object Graph {
       // jump: comp(v) := comp(comp(v)) — comp is always an existing
       // node id (a min over node ids), and labels only decrease, so
       // the looked-up label can only improve the bound
-      lbl = prop.as("l")
+      prop.as("l")
         .join(prop.select(col("node").as("p"), col("comp").as("pc")).as("pp"),
           col("l.comp") === col("pp.p"), "left")
         .select(col("l.node").as("node"),
           coalesce(col("pc"), col("l.comp")).as("comp"))
-      if (r == rounds) lbl = probe(lbl).localCheckpoint()
-      else if (r % 2 == 0) lbl = lbl.localCheckpoint()
     }
-    lbl
   }
 
   /** Fixed-round label-propagation communities (Raghavan et al. 2007 —
@@ -497,7 +476,7 @@ object Graph {
     *
     * Scale: per round one edge-frame join + one (node, label) count
     * aggregate (map-side combined) + one node-sized arg-min aggregate —
-    * 2 shuffles, state O(nodes); localCheckpoint every other round
+    * 2 shuffles, state O(nodes); localCheckpoint every third round
     * bounds plan depth like the other iterative ops. Skew: a hub's
     * per-label counts pre-aggregate map-side, so hot nodes cost one
     * combiner row per distinct neighbor label, not one per edge.
@@ -508,25 +487,19 @@ object Graph {
       dstCol: String = "dst",
       rounds: Int = 4): DataFrame = {
     require(rounds >= 1, "need at least one round")
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint()
-    var lbl = adj.select(col("u").as("node")).distinct()
+    val adj = adjacency(edges, srcCol, dstCol)
+    val init = adj.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    for (r <- 1 to rounds) {
+    sweep(init, rounds, 3) { (lbl, _) =>
       val counts = adj
         .join(lbl.select(col("node").as("v"), col("label").as("nl")), Seq("v"))
         .groupBy(col("u").as("node"), col("nl"))
         .agg(count(lit(1)).as("c"))
       // arg-min over (-count, label): max count, then smallest label —
       // every node has a neighbor here, so the aggregate is total
-      lbl = counts.groupBy("node")
+      counts.groupBy("node")
         .agg(min_by(col("nl"), struct((-col("c")).as("nc"), col("nl"))).as("label"))
-      if (r == rounds) lbl = probe(lbl).localCheckpoint()
-      else if (r % 3 == 0) lbl = lbl.localCheckpoint()
     }
-    lbl
   }
 
   /** Deterministic one-level Louvain: synchronous fixed-round modularity
@@ -604,9 +577,7 @@ object Graph {
     */
   private def louvainSweeps(wedges: DataFrame, rounds: Int): DataFrame = {
     val e = wedges.localCheckpoint()
-    val ns = e.filter(col("lo") =!= col("hi"))
-    val adj = ns.select(col("lo").as("u"), col("hi").as("v"), col("w"))
-      .unionAll(ns.select(col("hi").as("u"), col("lo").as("v"), col("w")))
+    val adj = symmetric(e.filter(col("lo") =!= col("hi")), "w")
     // deg is STATIC but read twice per round (sumtot + scored): without
     // the checkpoint each read replays the edge-sized union + aggregate
     // from e's blocks — node-sized once materialized
@@ -623,8 +594,7 @@ object Graph {
     val adjHalf = Array(0, 1).map(p =>
       adj.filter(pmod(col("u"), lit(2)) === lit(p)))
     val m = e.agg(coalesce(sum(col("w")), lit(0L))).collect()(0).getLong(0)
-    var comm = deg.select(col("u").as("node"), col("u").as("c"))
-    for (r <- 1 to rounds) {
+    sweep(deg.select(col("u").as("node"), col("u").as("c")), rounds, 2) { (comm, r) =>
       val par = r % 2
       val sumtot = comm
         .join(deg.select(col("u").as("node"), col("k")), Seq("node"))
@@ -650,12 +620,8 @@ object Graph {
           when(col("cv") === col("a"), 0).otherwise(1).as("pref"),
           col("cv").as("cc"))).as("c"))
         .select(col("u").as("node"), col("c"))
-      comm = moved.unionByName(
-        comm.filter(pmod(col("node"), lit(2)) =!= lit(par)))
-      if (r == rounds) comm = probe(comm).localCheckpoint()
-      else if (r % 2 == 0) comm = comm.localCheckpoint()
+      moved.unionByName(comm.filter(pmod(col("node"), lit(2)) =!= lit(par)))
     }
-    comm
   }
 
   /** One Louvain COARSEN + re-optimize level (Blondel et al.'s phase 2
@@ -776,8 +742,7 @@ object Graph {
     // degrees) — integer weights, so the BIGINT exactness holds; the
     // unit path is w = 1, value-identical to the former count form
     val e = canonicalWeighted(edges, srcCol, dstCol, weightCol).localCheckpoint()
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"), col("w"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v"), col("w")))
+    val adj = symmetric(e, "w")
     val cm = comm.select(col(nodeCol).as("n"), col(commCol).as("cc"))
     val deg = adj.groupBy(col("u").as("n")).agg(sum(col("w")).as("k"))
     // both struct branches cast the id to STRING: the user's community
@@ -891,8 +856,7 @@ object Graph {
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     val e = canonicalUndirected(edges, srcCol, dstCol).localCheckpoint()
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
+    val adj = symmetric(e)
     val deg = adj.groupBy("u").agg(count(lit(1)).as("k")).localCheckpoint()
     val degStats = deg.agg(
       count(lit(1)).as("nodes"),
@@ -941,10 +905,8 @@ object Graph {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
-    adj.groupBy("u").agg(count(lit(1)).as("k"))
+    symmetric(canonicalUndirected(edges, srcCol, dstCol))
+      .groupBy("u").agg(count(lit(1)).as("k"))
       .withColumn("bin", (length(bin(col("k"))) - 1).cast("int"))
       .groupBy("bin").agg(count(lit(1)).as("n_nodes"),
         min(col("k")).as("min_degree"), max(col("k")).as("max_degree"))
@@ -1038,9 +1000,7 @@ object Graph {
     require(walksPerNode >= 1, "need at least one walk per node")
     require(maxNeighbors >= 1, "need at least one candidate neighbor")
     graft.plans.GraftFunctions.register(edges.sparkSession)
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
+    val adj = symmetric(canonicalUndirected(edges, srcCol, dstCol))
     val nh = call_function("md5_prefix60",
       concat(lit("nbr:"), lit(salt), lit(":"), col("u").cast("string"),
         lit(":"), col("v").cast("string")).cast("binary"))
@@ -1142,34 +1102,10 @@ object Graph {
     require(radius >= 1 && radius <= 6,
       "radius must be in [1, 6] — the exact ball frame grows with sum |B_r(v)|; " +
         "use harmonicCentralityApprox beyond")
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint()
+    val adj = adjacency(edges, srcCol, dstCol)
     val nodes = adj.select(col("u").as("node")).distinct()
-    val base = nodes.select(col("node"), col("node").as("peer")).localCheckpoint()
-    // reached = base ∪ checkpointed frontiers: the union plan stays
-    // shallow (its leaves are checkpoint blocks), no re-checkpoint needed
-    var reached = base
-    var frontier = base
-    val layerCounts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    for (d <- 1 to radius) {
-      // new-layer pairs in ONE aggregate: candidate rows tagged 1 and
-      // already-reached rows tagged 0 share one (node, peer) min — a
-      // group whose min is 1 was never reached before, exactly the
-      // former distinct-then-anti-join result with one exchange instead
-      // of a distinct exchange plus a pair-sized anti join
-      val cand = frontier
-        .join(adj.withColumnRenamed("u", "peer"), Seq("peer"))
-        .select(col("node"), col("v").as("peer"), lit(1).as("__new"))
-      frontier = cand
-        .unionByName(reached.select(col("node"), col("peer"), lit(0).as("__new")))
-        .groupBy("node", "peer").agg(min(col("__new")).as("__new"))
-        .filter(col("__new") === 1).select("node", "peer")
-        .localCheckpoint()
-      reached = reached.unionAll(frontier)
-      layerCounts +=
-        frontier.groupBy("node").agg(count(lit(1)).as("cnt")).withColumn("d", lit(d))
+    val layerCounts = bfsLayers(adj, radius).zipWithIndex.tail.map { case (layer, d) =>
+      layer.groupBy("node").agg(count(lit(1)).as("cnt")).withColumn("d", lit(d))
     }
     // fixed-order fold c1/1 + c2/2 + … — bit-identical on any engine
     val hExpr = (1 to radius)
@@ -1210,41 +1146,10 @@ object Graph {
       "radius must be in [1, 6] — the exact pair frame grows with sum |B_r(v)|; " +
         "use neighborhoodFunctionApprox beyond")
     require(quantile > 0.0 && quantile <= 1.0, "quantile must be in (0, 1]")
-    val spark = edges.sparkSession
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint()
-    val base = adj.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("peer")).localCheckpoint()
-    var reached = base
-    var frontier = base
     // cumulative exact totals; radius+1 scalar counts (radius <= 6)
-    val totals = scala.collection.mutable.ArrayBuffer(base.count())
-    for (_ <- 1 to radius) {
-      // one-aggregate frontier (tag-min replaces distinct + anti join —
-      // the harmonicCentrality reasoning)
-      val cand = frontier
-        .join(adj.withColumnRenamed("u", "peer"), Seq("peer"))
-        .select(col("node"), col("v").as("peer"), lit(1).as("__new"))
-      frontier = cand
-        .unionByName(reached.select(col("node"), col("peer"), lit(0).as("__new")))
-        .groupBy("node", "peer").agg(min(col("__new")).as("__new"))
-        .filter(col("__new") === 1).select("node", "peer")
-        .localCheckpoint()
-      reached = reached.unionAll(frontier)
-      totals += totals.last + frontier.count()
-    }
-    val nfMax = totals.last
-    // unrounded coverage decides the effective flag (exact-long division
-    // is the same IEEE double on any engine); the reported column rounds
-    val cov = totals.map(_.toDouble / nfMax.toDouble)
-    val effD = cov.indexWhere(_ >= quantile)
-    import spark.implicits._
-    totals.toSeq.zipWithIndex.map { case (v, d) =>
-      (d, v, BigDecimal(cov(d)).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        d == effD)
-    }.toDF("d", "nf", "coverage", "effective")
+    val totals = bfsLayers(adjacency(edges, srcCol, dstCol), radius)
+      .map(_.count()).scanLeft(0L)(_ + _).tail
+    coverageTable(edges.sparkSession, totals, quantile, "nf")
   }
 
   /** HyperANF neighborhood function (Boldi–Rosa–Vigna): N(d) as the sum
@@ -1265,40 +1170,25 @@ object Graph {
       quantile: Double = 0.9): DataFrame = {
     require(radius >= 1, "need at least one sweep")
     require(quantile > 0.0 && quantile <= 1.0, "quantile must be in (0, 1]")
-    val spark = edges.sparkSession
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint()
-    var cur = adj.select(col("u").as("node"))
+    val adj = adjacency(edges, srcCol, dstCol)
+    // Spark's hll_sketch_estimate returns BIGINT (rounded estimate) —
+    // sum as long, report as double; an edgeless graph sums no rows
+    // (null), left to the coverage table's empty-graph guard
+    def total(cur: DataFrame): Double = {
+      val t = cur.agg(sum(expr("hll_sketch_estimate(sk)")).as("t")).collect()(0)
+      if (t.isNullAt(0)) 0.0 else t.getLong(0).toDouble
+    }
+    val totals = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val init = adj.select(col("u").as("node"))
       .groupBy("node").agg(expr(s"hll_sketch_agg(node, $lgK)").as("sk"))
       .localCheckpoint()
-    // Spark's hll_sketch_estimate returns BIGINT (rounded estimate) —
-    // sum as long, report as double
-    def total(): Double = cur
-      .agg(sum(expr("hll_sketch_estimate(sk)")).as("t"))
-      .collect()(0).getLong(0).toDouble
-    val totals = scala.collection.mutable.ArrayBuffer(total())
-    for (_ <- 1 to radius) {
-      val contrib = adj
-        .join(cur.select(col("node").as("u"), col("sk")), Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(expr("hll_union_agg(sk)").as("nsk"))
-      cur = cur.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          when(col("nsk").isNull, col("sk"))
-            .otherwise(expr("hll_union(sk, nsk)")).as("sk"))
-        .localCheckpoint()
-      totals += total()
+    // round d's input is round d−1's checkpointed ball frame
+    val last = sweep(init, radius, 1) { (cur, _) =>
+      totals += total(cur)
+      hyperBallStep(adj, cur)
     }
-    val nfMax = totals.last
-    val cov = totals.map(_ / nfMax)
-    val effD = cov.indexWhere(_ >= quantile)
-    import spark.implicits._
-    totals.toSeq.zipWithIndex.map { case (v, d) =>
-      (d, v, BigDecimal(cov(d)).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        d == effD)
-    }.toDF("d", "nf_est", "coverage", "effective")
+    totals += total(last)
+    coverageTable(edges.sparkSession, totals.toSeq, quantile, "nf_est")
   }
 
   /** HyperBall-approximated harmonic centrality (Boldi–Rosa–Vigna,
@@ -1325,39 +1215,107 @@ object Graph {
       radius: Int = 4,
       lgK: Int = 12): DataFrame = {
     require(radius >= 1, "need at least one sweep")
-    val e = canonicalUndirected(edges, srcCol, dstCol)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .unionAll(e.select(col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint()
-    var cur = adj.select(col("u").as("node"))
+    val adj = adjacency(edges, srcCol, dstCol)
+    val init = adj.select(col("u").as("node"))
       .groupBy("node").agg(expr(s"hll_sketch_agg(node, $lgK)").as("sk"))
       .select(col("node"), col("sk"), lit(0.0).as("h"),
         expr("hll_sketch_estimate(sk)").as("prev"))
       .localCheckpoint()
-    for (d <- 1 to radius) {
-      val contrib = adj
-        .join(cur.select(col("node").as("u"), col("sk")), Seq("u"))
-        .groupBy(col("v").as("node"))
-        .agg(expr("hll_union_agg(sk)").as("nsk"))
-      cur = cur.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          when(col("nsk").isNull, col("sk"))
-            .otherwise(expr("hll_union(sk, nsk)")).as("sk"),
-          col("h"), col("prev"))
+    sweep(init, radius, 1) { (cur, d) =>
+      hyperBallStep(adj, cur, "h", "prev")
         .select(col("node"), col("sk"),
           (col("h") +
             greatest(expr("hll_sketch_estimate(sk)") - col("prev"), lit(0L))
               .cast("double") / lit(d.toDouble)).as("h"),
           expr("hll_sketch_estimate(sk)").as("prev"))
-        .localCheckpoint()
-    }
-    cur.select(col("node"), col("prev").as("ball_est"),
+    }.select(col("node"), col("prev").as("ball_est"),
       round(col("h"), 6).as("harmonic"))
   }
 
-  /** Canonical simple-graph form shared by [[kCore]] and
-    * [[triangleCounts]]: long-typed (lo < hi) distinct pairs, self-loops
-    * dropped.
+  /** [[symmetric]] adjacency of the canonical simple graph,
+    * materialized once — every sweep of the ops that iterate over it
+    * re-reads it.
+    */
+  private def adjacency(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    symmetric(canonicalUndirected(edges, srcCol, dstCol)).localCheckpoint()
+
+  /** Both directions of a canonical (lo, hi) edge frame as (u, v) rows,
+    * carrying the `carried` columns (the edge weight `w`) on each.
+    */
+  private def symmetric(e: DataFrame, carried: String*): DataFrame = {
+    def half(ends: Column*) = e.select(ends ++ carried.map(col): _*)
+    half(col("lo").as("u"), col("hi").as("v"))
+      .unionAll(half(col("hi").as("u"), col("lo").as("v")))
+  }
+
+  /** Exact layered multi-source BFS over a symmetric adjacency as
+    * (node, peer) pair frames: element d holds the pairs first reached
+    * at exactly d hops, d = 0..radius (depth 0 pairs every node with
+    * itself), each one checkpointed. A layer is ONE aggregate:
+    * candidate rows tagged 1 and already-reached rows tagged 0 share
+    * one (node, peer) min — a group whose min is 1 was never reached
+    * before, exactly the distinct-then-anti-join result with one
+    * exchange instead of a distinct exchange plus a pair-sized anti
+    * join. The reached set is the union of the checkpointed layers, so
+    * its plan stays shallow (its leaves are checkpoint blocks).
+    */
+  private def bfsLayers(adj: DataFrame, radius: Int): Seq[DataFrame] = {
+    val base = adj.select(col("u").as("node")).distinct()
+      .select(col("node"), col("node").as("peer")).localCheckpoint()
+    val layers = scala.collection.mutable.ArrayBuffer(base)
+    // round d's input is layer d−1, already checkpointed by the sweep
+    val last = sweep(base, radius, 1) { (frontier, d) =>
+      if (d > 1) layers += frontier
+      frontier
+        .join(adj.withColumnRenamed("u", "peer"), Seq("peer"))
+        .select(col("node"), col("v").as("peer"), lit(1).as("__new"))
+        .unionByName(layers.reduce(_ unionAll _)
+          .select(col("node"), col("peer"), lit(0).as("__new")))
+        .groupBy("node", "peer").agg(min(col("__new")).as("__new"))
+        .filter(col("__new") === 1).select("node", "peer")
+    }
+    (layers += last).toSeq
+  }
+
+  /** One HyperBall sweep: every node's ball sketch `sk` unions its
+    * neighbors' sketches (one edge join + one map-side-combined
+    * `hll_union_agg`); a node no sketch reaches keeps its own. The
+    * `carried` columns ride along unchanged.
+    */
+  private def hyperBallStep(adj: DataFrame, cur: DataFrame, carried: String*): DataFrame = {
+    val contrib = adj
+      .join(cur.select(col("node").as("u"), col("sk")), Seq("u"))
+      .groupBy(col("v").as("node"))
+      .agg(expr("hll_union_agg(sk)").as("nsk"))
+    cur.join(contrib, Seq("node"), "left")
+      .select(col("node") +: when(col("nsk").isNull, col("sk"))
+        .otherwise(expr("hll_union(sk, nsk)")).as("sk") +: carried.map(col): _*)
+  }
+
+  /** The neighborhood-function table of [[neighborhoodFunction]] and
+    * [[neighborhoodFunctionApprox]] from the cumulative totals
+    * N(0..radius): (d, `nfCol`, coverage, effective). Unrounded
+    * coverage N(d)/N(radius) decides the effective flag (one IEEE
+    * division, the same double on any engine); the reported column
+    * rounds to 9. An edgeless graph has N(radius) = 0 and fails.
+    */
+  private def coverageTable[T: Numeric: TypeTag](spark: SparkSession, totals: Seq[T],
+      quantile: Double, nfCol: String): DataFrame = {
+    val num = implicitly[Numeric[T]]
+    val nfMax = num.toDouble(totals.last)
+    require(nfMax > 0.0,
+      "neighborhood function of an empty graph: the edge frame has no edge between two distinct nodes")
+    val cov = totals.map(num.toDouble(_) / nfMax)
+    val effD = cov.indexWhere(_ >= quantile)
+    import spark.implicits._
+    totals.zipWithIndex.map { case (v, d) =>
+      (d, v, BigDecimal(cov(d)).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        d == effD)
+    }.toDF("d", nfCol, "coverage", "effective")
+  }
+
+  /** Canonical simple-graph form every undirected op starts from:
+    * long-typed (lo < hi) distinct pairs, self-loops dropped.
     */
   private def canonicalUndirected(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame =
@@ -1403,9 +1361,7 @@ object Graph {
     * generates zero wedges instead of a quadratic fan-out.
     */
   private[graft] def orientByDegree(e: DataFrame): DataFrame = {
-    val deg = e.select(col("lo").as("node"))
-      .unionAll(e.select(col("hi").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    val deg = undirectedDegrees(e)
     val withDeg = e
       .join(deg.toDF("lo", "dlo"), Seq("lo"))
       .join(deg.toDF("hi", "dhi"), Seq("hi"))

@@ -408,9 +408,6 @@ object AnalyticsQueries {
           (col("l_suppkey") + lit(10000000L)).as("dst"))
       val und = edges.unionByName(
         edges.select(col("dst").as("src"), col("src").as("dst")))
-      // broadcastRanks measured SLOWER here (4.8 vs 3.7 s at sf0.1):
-      // 10 driver broadcast builds of the node table beat losing the
-      // reused shuffle exchanges only when the edge frame is huge
       graft.functions.Graph.pageRank(und, iterations = 5)
         .select(col("node"), round(col("rank"), 9).as("rank"))
     },

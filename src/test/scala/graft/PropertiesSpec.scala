@@ -326,6 +326,66 @@ class PropertiesSpec extends SparkSpec {
       5L -> 2L, 6L -> 2L, 7L -> 1L), s"got $all")
   }
 
+  test("graph sweep checkpoints round r when r % every == 0 and after the last round") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    def isCheckpoint(df: DataFrame) = df.queryExecution.logical.isInstanceOf[LogicalRDD]
+    val schedules = Seq((5, 2) -> Set(2, 4, 5), (3, 3) -> Set(3),
+      (6, 3) -> Set(3, 6), (4, 1) -> Set(1, 2, 3, 4))
+    for (((rounds, every), checkpointed) <- schedules) {
+      val inputs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val out = graft.functions.Graph.sweep(spark.range(3).toDF("x"), rounds, every) {
+        (df, r) => inputs += df; df.select((col("x") + r).as("x"))
+      }
+      // round r reads round r−1's frame; round 1 reads the lazy init
+      assert(inputs.map(isCheckpoint).toSeq == (0 until rounds).map(checkpointed),
+        s"round inputs for ($rounds, $every)")
+      assert(isCheckpoint(out), s"result for ($rounds, $every)")
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq ==
+        (0L until 3L).map(_ + rounds * (rounds + 1) / 2), s"values for ($rounds, $every)")
+    }
+  }
+
+  test("graph ops on an empty edge frame: a declared error or an empty result") {
+    import graft.functions.Graph
+    import org.apache.spark.sql.DataFrame
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val noComm = Seq.empty[(Long, Long)].toDF("node", "community")
+    // no node to rank, no pair to count, no seed in the graph: each
+    // fails with IllegalArgumentException, never an engine error
+    val failing = Seq[(String, () => DataFrame)](
+      "pageRank" -> (() => Graph.pageRank(empty)),
+      "personalizedPageRank" -> (() => Graph.personalizedPageRank(empty, Seq(1L).toDF("node"))),
+      "neighborhoodFunction" -> (() => Graph.neighborhoodFunction(empty)),
+      "neighborhoodFunctionApprox" -> (() => Graph.neighborhoodFunctionApprox(empty, radius = 2)))
+    for ((name, op) <- failing)
+      withClue(name)(intercept[IllegalArgumentException](op().collect()))
+    val emptyOut = Seq[(String, () => DataFrame)](
+      "hits" -> (() => Graph.hits(empty)),
+      "kCore" -> (() => Graph.kCore(empty)),
+      "connectedComponents" -> (() => Graph.connectedComponents(empty)),
+      "labelPropagation" -> (() => Graph.labelPropagation(empty)),
+      "louvainCommunities" -> (() => Graph.louvainCommunities(empty)),
+      "louvainRefine" -> (() => Graph.louvainRefine(empty, noComm)),
+      "louvainMultiLevel" -> (() => Graph.louvainMultiLevel(empty)),
+      "communityProfile" -> (() => Graph.communityProfile(empty, noComm)),
+      "degreeHistogram" -> (() => Graph.degreeHistogram(empty)),
+      "projectBipartite" -> (() => Graph.projectBipartite(empty, "src", "dst")),
+      "randomWalks" -> (() => Graph.randomWalks(empty)),
+      "skipGramPairs" -> (() => Graph.skipGramPairs(Graph.randomWalks(empty))),
+      "harmonicCentrality" -> (() => Graph.harmonicCentrality(empty)),
+      "harmonicCentralityApprox" -> (() => Graph.harmonicCentralityApprox(empty, radius = 2)),
+      "triangleCounts" -> (() => Graph.triangleCounts(empty)))
+    for ((name, op) <- emptyOut) assert(op().count() == 0, name)
+    // the one-row summaries report a zero-edge graph
+    val mod = Graph.modularity(empty, noComm).collect()
+    assert(mod.length == 1 && mod(0).getLong(0) == 0L && mod(0).getLong(1) == 0L,
+      s"modularity ${mod.toSeq}")
+    val summary = Graph.graphSummary(empty).collect()
+    assert(summary.length == 1 && summary(0).getLong(0) == 0L && summary(0).getLong(1) == 0L,
+      s"graphSummary ${summary.toSeq}")
+  }
+
   test("unigram encode(train(corpus)) tokens re-concatenate to the normalized text") {
     // lossless-cover property: for every document, joining the emitted
     // token stream reproduces the normalized text minus spaces — a
