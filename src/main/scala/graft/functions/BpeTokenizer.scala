@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -175,7 +176,7 @@ object BpeTokenizer {
     merges.toSeq
   }
 
-  /** Serialized merge table for the `bpe_encode` registry builder: one
+  /** Serialized merge table for [[graft.plans.GraftFunctions.bpeEncode]]: one
     * `lhs<SP>rhs` line per merge, rank order (symbols never contain
     * spaces — eligible words are `[a-z]+` and the marker is `</w>`).
     */
@@ -209,9 +210,8 @@ object BpeTokenizer {
     // as four single-char fallbacks per word. Guarantee it here, exactly
     // as vocabFromMerges does.
     val fullVocab = if (vocab.contains("</w>")) vocab else vocab :+ "</w>"
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val toks = call_function("piece_encode",
-      TextOps.normalizeText(col(textCol)), lit(fullVocab.mkString("\n")), lit(maxWordLen))
+    val toks = GraftFunctions.pieceEncode(
+      TextOps.normalizeText(col(textCol)), fullVocab.mkString("\n"), maxWordLen)
     df.select(col(keyCol), toks.as("tokens"))
       .withColumn("n_tokens", size(col("tokens")))
   }
@@ -227,9 +227,8 @@ object BpeTokenizer {
       keyCol: String,
       merges: Seq[BpeMerge],
       maxWordLen: Int = 32): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val toks = call_function("bpe_encode",
-      TextOps.normalizeText(col(textCol)), lit(mergesSpec(merges)), lit(maxWordLen))
+    val toks = GraftFunctions.bpeEncode(
+      TextOps.normalizeText(col(textCol)), mergesSpec(merges), maxWordLen)
     df.select(col(keyCol), toks.as("tokens"))
       .withColumn("n_tokens", size(col("tokens")))
   }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,12 +33,16 @@ object Dedup {
     val reliable = spark.conf
       .getOption("graft.dedup.reliableCheckpoint").exists(_.toBoolean)
     if (reliable) {
-      val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(
-          System.getProperty("java.io.tmpdir", "/tmp") + "/graft-checkpoints")
+      ensureCheckpointDir(spark)
       df.checkpoint(true)
     } else df.localCheckpoint(true)
+  }
+
+  /** Point an unset checkpoint directory at `java.io.tmpdir/graft-checkpoints`. */
+  private[graft] def ensureCheckpointDir(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val sc = spark.sparkContext
+    if (sc.getCheckpointDir.isEmpty)
+      sc.setCheckpointDir(System.getProperty("java.io.tmpdir", "/tmp") + "/graft-checkpoints")
   }
 
   /** Widen a compute-dense, byte-light scan to the session parallelism:
@@ -100,11 +105,9 @@ object Dedup {
   private[graft] def firstByKey(df: DataFrame, groupExpr: Column,
       keyCol: String): DataFrame = {
     val cols = df.columns.toSeq
-    // backticks inside a quoted identifier must be doubled, else a name
-    // containing one breaks the parse the quoting was added to survive
-    def q(c: String) = col("`" + c.replace("`", "``") + "`")
-    val quoted = cols.map(q)
-    val ord = struct(q(keyCol).isNull.cast("int"), q(keyCol))
+    val quoted = cols.map(GraftFunctions.exactCol)
+    val key = GraftFunctions.exactCol(keyCol)
+    val ord = struct(key.isNull.cast("int"), key)
     df.groupBy(groupExpr)
       .agg(min_by(struct(quoted: _*), ord).as("__r"))
       .select(cols.map(c => col("__r").getField(c).as(c)): _*)
@@ -170,7 +173,6 @@ object Dedup {
       windowTokens: Int = 50,
       minDocFreq: Int = 2): DataFrame = {
     require(windowTokens >= 1 && minDocFreq >= 2, "windowTokens >= 1, minDocFreq >= 2")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val w = windowTokens
     val toks = col("__toks")
     val grams = when(size(toks) < w, array().cast("array<struct<pos:int,gram:string>>"))
@@ -185,7 +187,7 @@ object Dedup {
         split(TextOps.normalizeText(col(textCol)), " ").as("__toks"))
       .select(col("key"), explode(grams).as("g"))
       .select(col("key"), col("g.pos").as("pos"),
-        expr("md5_prefix60(cast(g.gram as binary))").as("__h"))
+        GraftFunctions.md5Prefix60(col("g.gram").cast("binary")).as("__h"))
     val dupHashes = positions.groupBy("__h")
       .agg(countDistinct(col("key")).as("__df"))
       .filter(col("__df") >= minDocFreq)
@@ -360,9 +362,8 @@ object Dedup {
     */
   def minhashSignaturesMd5(sh: DataFrame, numHashes: Int = 16): DataFrame = {
     checkBanding(numHashes)
-    graft.plans.GraftFunctions.register(sh.sparkSession)
     // fused native expression: no 32-char hex intermediate per shingle
-    val base = expr("md5_prefix60(cast(shingle as binary))")
+    val base = GraftFunctions.md5Prefix60(col("shingle").cast("binary"))
     val aggs = md5Salts.take(numHashes).zipWithIndex.map { case (s, i) =>
       min(col("__h").bitwiseXOR(lit(s))).as(s"sig_$i")
     }
@@ -427,9 +428,8 @@ object Dedup {
       return rows.groupBy(groupCols.map(col): _*)
         .agg(collect_list(col("key")).as("ks0")).limit(0)
     if (rows.schema("key").dataType == org.apache.spark.sql.types.LongType) {
-      graft.plans.GraftFunctions.register(rows.sparkSession)
       rows.groupBy(groupCols.map(col): _*)
-        .agg(expr(s"bounded_collect_long(key, $cap)").as("ks0"))
+        .agg(GraftFunctions.boundedCollectLong(col("key"), cap).as("ks0"))
         .filter(col("ks0").isNotNull)
     } else {
       capGroups(rows, groupCols, cap)
@@ -730,15 +730,14 @@ object Dedup {
     * column is oracle-checkable.
     */
   def simhashMd5(df: DataFrame, textCol: String, keyCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val h = expr("md5_prefix60(cast(tok as binary))")
+    val h = GraftFunctions.md5Prefix60(col("tok").cast("binary"))
     // ONE 60-counter vote buffer per group (plans.SimHashVoteAgg) — value
     // is bit-identical to the 60-sum expression form the oracle replays
     df.select(col(keyCol).as("key"),
         explode(array_distinct(split(TextOps.normalizeText(col(textCol)), " "))).as("tok"))
       .filter(length(col("tok")) > 0)
       .select(col("key"), h.as("__h"))
-      .groupBy("key").agg(expr("simhash_votes(__h)").as("simhash"))
+      .groupBy("key").agg(GraftFunctions.simhashVotes(col("__h")).as("simhash"))
   }
 
   /** Scalar twin of [[simhashMd5]] for one document — the per-row
@@ -855,10 +854,7 @@ object Dedup {
       pairs: DataFrame, // [key_1, key_2]
       maxIter: Int = 20,
       maxLocalEdges: Long = 1000000L): DataFrame = {
-    val spark = pairs.sparkSession
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        System.getProperty("java.io.tmpdir", "/tmp") + "/graft-checkpoints")
+    ensureCheckpointDir(pairs.sparkSession)
     // The edge set is the DUPLICATE graph — tiny relative to the corpus
     // (near-dup pairs above threshold), even at 100 TB usually millions,
     // not billions. Under the cap, a driver union-find replaces ~10

@@ -368,14 +368,9 @@ object Geo {
       lloydIters: Int = 5,
       lloydQuantize: Int = 4): DataFrame = {
     import df.sparkSession.implicits._
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("id"),
       array(col(latCol).cast("float"), col(lonCol).cast("float")).as("v"))
-    val sample: Array[Array[Double]] = base
-      .orderBy(expr("md5_prefix60(cast(cast(id as string) as binary))").asc, col("id").asc)
-      .limit(fitSample)
-      .select(col("v"))
-      .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    val sample = Similarity.md5Sample(base, fitSample)
     val centers = Similarity.localKMeans(sample, k, 42L, lloydIters, lloydQuantize)
     val bc = df.sparkSession.sparkContext.broadcast(centers)
     base.map { r =>

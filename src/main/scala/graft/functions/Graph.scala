@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.reflect.runtime.universe.TypeTag
@@ -943,18 +944,16 @@ object Graph {
       maxPerGroup: Int = 64,
       salt: String = ""): DataFrame = {
     require(maxPerGroup >= 2, "need at least two rights per group to form a pair")
-    graft.plans.GraftFunctions.register(edges.sparkSession)
     val e0 = edges.select(col(leftCol).cast("long").as("l"),
       col(rightCol).cast("long").as("r")).distinct()
-    val h = call_function("md5_prefix60",
+    val h = GraftFunctions.md5Prefix60(
       concat(lit("proj:"), lit(salt), lit(":"), col("l").cast("string"),
         lit(":"), col("r").cast("string")).cast("binary"))
     // materialized once: the heap aggregate and the membership filter
     // both read it (the randomWalks adjH reasoning)
     val eh = e0.withColumn("__h", h).localCheckpoint()
     val top = eh.groupBy("l")
-      .agg(call_function("bounded_topk_long", col("__h"), lit(maxPerGroup))
-        .as("__top"))
+      .agg(GraftFunctions.boundedTopKLong(col("__h"), maxPerGroup).as("__top"))
     val kept = eh.join(top, Seq("l"))
       .filter(array_contains(col("__top"), col("__h")))
       .select(col("l"), col("r"))
@@ -999,9 +998,8 @@ object Graph {
     require(walkLength >= 1, "need at least one step")
     require(walksPerNode >= 1, "need at least one walk per node")
     require(maxNeighbors >= 1, "need at least one candidate neighbor")
-    graft.plans.GraftFunctions.register(edges.sparkSession)
     val adj = symmetric(canonicalUndirected(edges, srcCol, dstCol))
-    val nh = call_function("md5_prefix60",
+    val nh = GraftFunctions.md5Prefix60(
       concat(lit("nbr:"), lit(salt), lit(":"), col("u").cast("string"),
         lit(":"), col("v").cast("string")).cast("binary"))
     // materialized once: both the bounded-heap candidate agg and the
@@ -1011,8 +1009,7 @@ object Graph {
     // reason)
     val adjH = adj.withColumn("__h", nh).localCheckpoint()
     val top = adjH.groupBy("u")
-      .agg(call_function("bounded_topk_long", col("__h"), lit(maxNeighbors))
-        .as("__top"))
+      .agg(GraftFunctions.boundedTopKLong(col("__h"), maxNeighbors).as("__top"))
     // capped ranked candidates as one <=K array per node, h-sorted so
     // array index == hash rank (v tie-break mirrors the oracle's)
     val nbrs = adjH.join(top, Seq("u"))
@@ -1027,7 +1024,7 @@ object Graph {
     val steps = scala.collection.mutable.ArrayBuffer(
       frontier.withColumn("step", lit(0)))
     for (t <- 1 to walkLength) {
-      val wh = call_function("md5_prefix60",
+      val wh = GraftFunctions.md5Prefix60(
         concat(lit("walk:"), lit(salt), lit(":"), col("start").cast("string"),
           lit(":"), col("walk").cast("string"), lit(":"), lit(t.toString))
           .cast("binary"))

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,7 +39,6 @@ object ImportanceSampling {
       idCol: String,
       isTarget: Column,
       numBuckets: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     // widen a narrow input so the normalize→unigram/bigram explode (the
     // dominant map stage) runs at session parallelism, not on one scan
     // task; no-op at real scale (see Dedup.widenForCompute)
@@ -56,7 +56,8 @@ object ImportanceSampling {
     uni.unionByName(bi)
       .filter(length(col("f")) > 0)
       .select(col("id"), col("__tgt"),
-        pmod(expr("md5_prefix60(cast(f as binary))"), lit(numBuckets.toLong)).as("b"))
+        pmod(GraftFunctions.md5Prefix60(col("f").cast("binary")), lit(numBuckets.toLong))
+          .as("b"))
   }
 
   /** Importance scores for every raw-pool document (rows where
@@ -114,9 +115,7 @@ object ImportanceSampling {
     */
   def gumbelTopK(scores: DataFrame, idCol: String, k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    graft.plans.GraftFunctions.register(scores.sparkSession)
-    val u = (expr(s"md5_prefix60(cast(cast(`$idCol` as string) as binary))")
-      .cast("double") + lit(0.5)) / lit(math.pow(2.0, 60))
+    val u = GraftFunctions.md5Uniform(GraftFunctions.exactCol(idCol))
     scores
       .withColumn("gumbel_key", col("score") - log(-log(u)))
       .orderBy(col("gumbel_key").desc, col(idCol).asc)

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -199,13 +200,11 @@ object Sharding {
       nShards: Int,
       salt: String = ""): DataFrame = {
     require(nShards > 0, "nShards must be positive")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     // salt/idCol go through the Column API (lit + col), never string
     // interpolation into expr(): a quote or backslash in the salt, or a
     // backtick in the column name, must reach the hash as data — the same
     // contract piiMentions already keeps.
-    val h = call_function("md5_prefix60",
-      concat(lit(salt), lit(":"), col(idCol).cast("string")).cast("binary"))
+    val h = GraftFunctions.saltedKeyHash(salt, col(idCol).cast("string"))
     df.withColumn("__h", h)
       .withColumn("shard", pmod(col("__h"), lit(nShards.toLong)))
       .withColumn("shard_pos",

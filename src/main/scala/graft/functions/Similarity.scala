@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -374,7 +375,6 @@ object Similarity {
       lloydIters: Int = 15,
       lloydQuantize: Int = -1): DataFrame = {
     import df.sparkSession.implicits._
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     // row count drives only the AUTO knobs (cell grid size, salt count);
     // with an explicit cellCount and no free stats estimate we skip the
@@ -506,7 +506,6 @@ object Similarity {
       lloydQuantize: Int = 4,
       maxCellSize: Int = 100000): DataFrame = {
     import df.sparkSession.implicits._
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     // cellCount <= 0 → auto-size from the corpus like bruteForceTopK's
     // IVF failover: √N/4 cells keeps expected cell size ~4√N, so the
@@ -528,11 +527,7 @@ object Similarity {
     // sample with the target cell count (~4 points per center) so the
     // √N sizing holds at any corpus size
     val effectiveFitSample = math.max(fitSample, cells * 4)
-    val sample: Array[Array[Double]] = base
-      .orderBy(expr("md5_prefix60(cast(cast(id as string) as binary))").asc, col("id").asc)
-      .limit(effectiveFitSample)
-      .select(col("v"))
-      .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
+    val sample = md5Sample(base, effectiveFitSample)
     val centers = localKMeans(sample, cells, 42L, lloydIters, lloydQuantize)
     val bcCenters = df.sparkSession.sparkContext.broadcast(centers)
     val assigned = base.map { r =>
@@ -865,15 +860,12 @@ object Similarity {
     * (partition-layout-invariant and bounded regardless of corpus size).
     * `base` must be (id LONG, v ARRAY<FLOAT>).
     */
-  private[graft] def md5Sample(base: DataFrame, fitSample: Int): Array[Array[Double]] = {
-    graft.plans.GraftFunctions.register(base.sparkSession)
+  private[graft] def md5Sample(base: DataFrame, fitSample: Int): Array[Array[Double]] =
     base
-      .orderBy(expr("md5_prefix60(cast(cast(id as string) as binary))").asc,
-        col("id").asc)
+      .orderBy(GraftFunctions.stringHash(col("id")).asc, col("id").asc)
       .limit(fitSample)
       .select(col("v"))
       .collect().map(_.getSeq[Float](0).map(_.toDouble).toArray)
-  }
 
   /** Encode every vector to its `m` PQ codes (one output row per
     * (vector, subspace): `vec_id, sub, code`). Map-only over broadcast

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -417,8 +418,7 @@ object TextOps {
     * count underestimating by at most n/(k+1).
     */
   def heavyHitters(df: DataFrame, column: String, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    df.agg(expr(s"misra_gries(`$column`, $k)").as("hh"))
+    df.agg(GraftFunctions.misraGries(GraftFunctions.exactCol(column), k).as("hh"))
       .select(explode(col("hh")).as(Seq("item", "est_count")))
   }
 

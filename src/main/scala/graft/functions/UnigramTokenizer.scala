@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -63,8 +64,6 @@ object UnigramTokenizer {
     require(rounds >= 1, "rounds must be positive")
     require(maxPieceLen >= 1 && maxWordLen >= maxPieceLen,
       "need 1 <= maxPieceLen <= maxWordLen")
-    val spark = df.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     // the one corpus-sized stage; reused by every round
     val words = BpeTokenizer.wordFrequencies(df, textCol, maxWordLen)
       .localCheckpoint(true)
@@ -92,7 +91,7 @@ object UnigramTokenizer {
       val spec = vocab.map { case (p, _, lp) => s"$p $lp" }.mkString("\n")
       val counts = words
         .select(col("freq"),
-          explode(call_function("unigram_viterbi", col("word"), lit(spec)))
+          explode(GraftFunctions.unigramViterbi(col("word"), spec))
             .as("piece"))
         .groupBy("piece").agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("piece").asc)
@@ -116,9 +115,7 @@ object UnigramTokenizer {
     * words pass through as one verbatim token, so the stream always
     * round-trips. Output: keyCol, tokens, n_tokens.
     */
-  /** The token-array Column under a trained model — callers must have
-    * registered [[graft.plans.GraftFunctions]] on the session.
-    */
+  /** The token-array Column under a trained model. */
   def unigramTokens(
       textCol: org.apache.spark.sql.Column,
       vocab: Seq[UnigramPiece],
@@ -128,7 +125,7 @@ object UnigramTokenizer {
     flatten(transform(
       split(TextOps.normalizeText(textCol), " "),
       w => when(w.rlike("^[a-z]+$") && length(w) <= maxWordLen,
-          coalesce(call_function("unigram_viterbi", w, lit(spec)), array(w)))
+          coalesce(GraftFunctions.unigramViterbi(w, spec), array(w)))
         .otherwise(array(w))))
   }
 
@@ -138,7 +135,6 @@ object UnigramTokenizer {
       keyCol: String,
       vocab: Seq[UnigramPiece],
       maxWordLen: Int = 10): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.select(col(keyCol),
         unigramTokens(col(textCol), vocab, maxWordLen).as("tokens"))
       .withColumn("n_tokens", size(col("tokens")))

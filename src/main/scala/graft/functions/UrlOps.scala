@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -161,9 +162,7 @@ object UrlOps {
     // 1.26 s pre-full-list floor, steal 0%). The DuckDB oracle still
     // replays the same algorithm from the same rule tables as generated
     // IN lists (TextQueries.urlCanonCtes) — one rule source, two forms.
-    import org.apache.spark.sql.GraftColumnBridge
-    val sfxLen = GraftColumnBridge.column(
-      graft.plans.PslSuffixLenExpr(GraftColumnBridge.expression(host)))
+    val sfxLen = GraftFunctions.pslSuffixLen(host)
     when(n <= sfxLen, host)
       .otherwise(concat_ws(".", slice(labels, n - sfxLen, sfxLen + 1)))
   }
@@ -210,10 +209,8 @@ object UrlOps {
       maxDocs: Int,
       salt: String = ""): DataFrame = {
     require(maxDocs > 0, "maxDocs must be positive")
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val keyStr = coalesce(col(keyCol).cast("string"), lit(""))
-    val h = call_function("md5_prefix60",
-      concat(lit(salt), lit(":"), keyStr).cast("binary"))
+    val h = GraftFunctions.saltedKeyHash(salt,
+      coalesce(col(keyCol).cast("string"), lit("")))
     // null/unparseable-URL rows cap as ONE group: the quota join is a
     // plain (null-unsafe) equi-join, so a null __dom would never match
     // its stats row and the whole group would silently read as
@@ -227,7 +224,7 @@ object UrlOps {
     // domain is under quota and keeps everything), plus the threshold's
     // multiplicity within the top-k (how many boundary rows may keep)
     val stats = withH.groupBy(col("__dom"))
-      .agg(call_function("bounded_topk_long", col("__h"), lit(maxDocs)).as("__top"))
+      .agg(GraftFunctions.boundedTopKLong(col("__h"), maxDocs).as("__top"))
       .select(col("__dom"),
         when(size(col("__top")) < maxDocs, lit(null).cast("long"))
           .otherwise(element_at(col("__top"), -1)).as("__thr"),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -231,11 +232,9 @@ object IterativeImputer {
     require(cols.size >= 2, "iterative imputation needs >= 2 columns")
     require(scales.size == cols.size, "one quantization scale per column")
     val p = cols.size
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val parts = sampleKeyCols.map(c => s"cast(`$c` as string)").mkString(", ")
-    val h = expr(s"md5_prefix60(cast(concat_ws('|', $parts) as binary))")
+    val h = GraftFunctions.joinedKeyHash("|", sampleKeyCols)
     val sample: Array[Array[Long]] = df.na.drop(cols)
-      .orderBy(h.asc +: sampleKeyCols.map(c => col(c).asc): _*)
+      .orderBy(h.asc +: sampleKeyCols.map(c => GraftFunctions.exactCol(c).asc): _*)
       .limit(sampleSize)
       .select(cols.map(c => col(c).cast("double")): _*)
       .collect()

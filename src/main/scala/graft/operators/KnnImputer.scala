@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -58,11 +59,9 @@ object KnnImputer {
       k: Int = 5,
       sampleSize: Int = 10000): DataFrame = {
     require(sampleKeyCols.nonEmpty, "deterministic KNN needs sample key columns")
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val parts = sampleKeyCols.map(c => s"cast(`$c` as string)").mkString(", ")
-    val h = expr(s"md5_prefix60(cast(concat_ws('|', $parts) as binary))")
+    val h = GraftFunctions.joinedKeyHash("|", sampleKeyCols)
     val sample: Array[Array[Double]] = df.na.drop(cols)
-      .orderBy(h.asc +: sampleKeyCols.map(c => col(c).asc): _*)
+      .orderBy(h.asc +: sampleKeyCols.map(c => GraftFunctions.exactCol(c).asc): _*)
       .limit(sampleSize)
       .select(cols.map(c => col(c).cast("double")): _*)
       .collect().map(r => cols.indices.map(r.getDouble).toArray)

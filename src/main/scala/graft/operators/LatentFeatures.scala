@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.GraftFunctions
 import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -532,10 +533,7 @@ object LatentFeatures {
         // ALS lineage grows per iteration; without a checkpoint dir its
         // periodic checkpointing (interval 10) is skipped and closure
         // serialization can StackOverflow on deep plans
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(
-            System.getProperty("java.io.tmpdir", "/tmp") + "/graft-checkpoints")
+        graft.functions.Dedup.ensureCheckpointDir(df.sparkSession)
         val als = new ALS()
           .setUserCol("__user").setItemCol("__item").setRatingCol("rating")
           .setRank(rank).setMaxIter(maxIter).setRegParam(regParam)
@@ -712,14 +710,11 @@ object LatentFeatures {
       quantizeDp: Int = 9): DataFrame = {
     require(cols.size == 2, "deterministic auto-imputation ranks the 2-column harness")
     val spark = df.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val Seq(a, b) = cols
     val clean = df.na.drop(cols)
       .select((keyCols ++ cols).map(col): _*)
     val thr = graft.sources.Sampling.hashThresholdLong(nullPct)
-    val keyExpr = keyCols.map(k => s"cast(`$k` as string)").mkString(", ")
-    def maskCol(c: String) =
-      expr(s"md5_prefix60(cast(concat_ws('#', $keyExpr, '$c') as binary))") < lit(thr)
+    def maskCol(c: String) = GraftFunctions.joinedKeyHash("#", keyCols, lit(c)) < lit(thr)
     val maskedPlan = clean
       .withColumn("__m_a", maskCol(a)).withColumn("__m_b", maskCol(b))
       .select(col("__m_a"), col("__m_b"),
@@ -822,10 +817,9 @@ object LatentFeatures {
       lambda: Double = 0.1): DataFrame = {
     require(itemNames.size == nItems)
     val spark = obs.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     // lowest-md5 user sample (same idiom as the knn/iterative siblings)
     val users = obs.select(col("u")).distinct()
-      .withColumn("hh", expr("md5_prefix60(cast(cast(u as string) as binary))"))
+      .withColumn("hh", GraftFunctions.stringHash(col("u")))
       .orderBy(col("hh").asc, col("u").asc)
       .limit(sampleSize)
       .select("u")

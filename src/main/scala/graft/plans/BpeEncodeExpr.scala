@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `mergesSpec` is the serialized merge table — one merge per line,
   * `left<SP>right`, in rank order (symbols never contain spaces: words
-  * are `[a-z]+` and the marker is `</w>`). It arrives as a foldable
-  * literal through the `bpe_encode(text, merges, maxWordLen)` registry
-  * builder, same idiom as `misra_gries`'s k.
+  * are `[a-z]+` and the marker is `</w>`), passed as a constructor
+  * argument by `GraftFunctions.bpeEncode(text, merges, maxWordLen)`, or
+  * as a foldable literal through the `bpe_encode` SQL builder.
   */
 case class BpeEncodeExpr(child: Expression, mergesSpec: String, maxWordLen: Int)
     extends UnaryExpression {
@@ -134,8 +134,8 @@ case class BpeEncodeExpr(child: Expression, mergesSpec: String, maxWordLen: Int)
   * bounded word memo; matching cost is O(len · maxPieceLen) per uncached
   * word via a per-length hash probe, not a vocab scan.
   *
-  * `vocabSpec` = newline-separated pieces via the
-  * `piece_encode(text, vocab, maxWordLen)` registry builder.
+  * `vocabSpec` = newline-separated pieces, built by
+  * `GraftFunctions.pieceEncode(text, vocab, maxWordLen)`.
   */
 case class GreedyPieceEncodeExpr(child: Expression, vocabSpec: String, maxWordLen: Int)
     extends UnaryExpression {

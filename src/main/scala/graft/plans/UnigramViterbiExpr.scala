@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Shape economics as [[BpeEncodeExpr]]: scalar codegen'd expression,
   * vocabulary folded into the plan as a constant (`piece<SP>logp`
-  * lines via the `unigram_viterbi(word, spec)` registry builder),
+  * lines, built by `GraftFunctions.unigramViterbi(word, spec)`),
   * bounded per-instance word memo.
   */
 case class UnigramViterbiExpr(child: Expression, vocabSpec: String)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.Geo
+import graft.plans.GraftFunctions
 import graft.queries.QueryPack._
 import org.apache.spark.sql.functions._
 
@@ -137,11 +138,11 @@ object GeoQueries {
   val qGeohash = Q(
     "q_geohash",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val pts = withPoints(tables(s, dir).customer)
       pts.select(
         col("c_custkey"),
-        expr("geohash_encode(cast(lat as double), cast(lon as double), 7)").as("gh7"))
+        GraftFunctions.geohashEncode(col("lat").cast("double"), col("lon").cast("double"), 7)
+          .as("gh7"))
         .withColumn("gh4", Geo.geohashPrecisionControl(col("gh7"), 4))
         .withColumn("lat_rt", round(Geo.geohashDecodeLatUdf(col("gh7")), 2))
     },

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.{Dedup, Sharding, Similarity, TextOps}
+import graft.plans.GraftFunctions
 import graft.queries.QueryPack._
 import graft.sources.{Ingest, Sampling}
 import org.apache.spark.sql.functions._
@@ -2310,7 +2311,6 @@ semantic_dedup:
   val qJaroWinkler = Q(
     "q_jaro_winkler",
     (s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val sup = tables(s, dir).supplier
         .select(col("s_suppkey").cast("long").as("key"),
           lower(trim(col("s_name"))).as("name"))
@@ -2326,7 +2326,7 @@ semantic_dedup:
       val right = sup.select(col("key").as("key_2"), col("name").as("name_2"))
       left.join(right, "key_2")
         .select(col("key_1"), col("key_2"),
-          expr("round(jaro_winkler(name_1, name_2), 4)").as("jw"))
+          round(GraftFunctions.jaroWinkler(col("name_1"), col("name_2")), 4).as("jw"))
     },
     Some("""
       WITH s AS (SELECT s_suppkey AS key, lower(trim(s_name)) AS name FROM supplier)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -89,11 +90,8 @@ object Sampling {
     * native `md5_prefix60` expression (no 32-char hex string built and
     * re-parsed per row; stays in whole-stage codegen).
     */
-  private def keyHash(df: DataFrame, keyCols: Seq[String]): org.apache.spark.sql.Column = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    val parts = keyCols.map(c => s"cast(`$c` as string)").mkString(", ")
-    expr(s"md5_prefix60(cast(concat_ws('', $parts) as binary))")
-  }
+  private def keyHash(keyCols: Seq[String]): org.apache.spark.sql.Column =
+    GraftFunctions.joinedKeyHash("", keyCols)
 
   /** Deterministic content-hash sampling: keep rows whose md5(key-expr)
     * prefix falls below [[hashThresholdHex]](fraction). Map-only — no
@@ -106,7 +104,7 @@ object Sampling {
     */
   def deterministicSample(df: DataFrame, fraction: Double, keyCols: Seq[String]): DataFrame = {
     require(keyCols.nonEmpty, "deterministic sampling needs key columns")
-    df.filter(keyHash(df, keyCols) < lit(hashThresholdLong(fraction)))
+    df.filter(keyHash(keyCols) < lit(hashThresholdLong(fraction)))
   }
 
   /** Deterministic stratified sampling with EXACT per-stratum sizes:
@@ -150,7 +148,7 @@ object Sampling {
     import org.apache.spark.sql.expressions.Window
     val keyed = df.na.drop("any", strataCols).withColumn("__stratum",
       concat_ws(sep, strataCols.map(c => col(c).cast("string")): _*))
-    val h = keyHash(df, keyCols)
+    val h = keyHash(keyCols)
     // tie-break through every remaining column: rows sharing the key
     // columns still rank deterministically (fully identical rows are
     // interchangeable, so the kept MULTISET stays a pure function of the
@@ -195,7 +193,7 @@ object Sampling {
     require(weights.nonEmpty && weights.forall(_._2 > 0), "weights must be positive")
     val total = weights.map(_._2).sum
     val cum = weights.scanLeft(0.0)(_ + _._2 / total).tail
-    val h = keyHash(df, keyCols)
+    val h = keyHash(keyCols)
     val labeled = weights.zip(cum).init.foldRight(lit(weights.last._1)) {
       case (((name, _), cumW), elseCol) =>
         when(h < lit(hashThresholdLong(cumW)), lit(name)).otherwise(elseCol)
@@ -285,7 +283,7 @@ object Sampling {
     require(targets.nonEmpty, "mixture sampling needs per-source targets")
     import org.apache.spark.sql.expressions.Window
     val src = col(sourceCol).cast("string")
-    val h = keyHash(df, keyCols)
+    val h = keyHash(keyCols)
     val base0 = df
       .withColumn("__tok", tokenCol.cast("long"))
       .withColumn("__tgt", element_at(typedLit(targets), src))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -116,11 +117,10 @@ object StreamingOps {
     // newline would silently shred into bogus pieces on the stream
     require(vocab.forall(p => p.nonEmpty && !p.contains("\n") && !p.contains(" ")),
       "pieces must be non-empty and free of newlines/spaces")
-    graft.plans.GraftFunctions.register(stream.sparkSession)
     val fullVocab = if (vocab.contains("</w>")) vocab else vocab :+ "</w>"
-    val toks = call_function("piece_encode",
+    val toks = GraftFunctions.pieceEncode(
       graft.functions.TextOps.normalizeText(col(textCol)),
-      lit(fullVocab.mkString("\n")), lit(maxWordLen))
+      fullVocab.mkString("\n"), maxWordLen)
     stream.withWatermark(tsCol, watermark)
       .select(col(tsCol), size(toks).as("__n"))
       .groupBy(window(col(tsCol), windowDuration))
@@ -611,7 +611,6 @@ object StreamingOps {
       maxOccState: Int = 10000): Dataset[SpanFlag] = {
     require(windowTokens >= 1 && minDocFreq >= 2, "windowTokens >= 1, minDocFreq >= 2")
     import stream.sparkSession.implicits._
-    graft.plans.GraftFunctions.register(stream.sparkSession)
     val w = windowTokens
     val toks = col("__toks")
     // identical gram construction + 60-bit hash as the batch path, so a
@@ -627,7 +626,7 @@ object StreamingOps {
         split(graft.functions.TextOps.normalizeText(col(textCol)), " ").as("__toks"),
         col(tsCol))
       .select(col("__key"), explode(grams).as("__g"), col(tsCol))
-      .select(expr("md5_prefix60(cast(__g.gram as binary))").as("__h"),
+      .select(GraftFunctions.md5Prefix60(col("__g.gram").cast("binary")).as("__h"),
         col("__key"), col("__g.pos").as("__pos"), col(tsCol))
       .as[(Long, Long, Int, java.sql.Timestamp)]
     // state: (flagged marker, stored pre-flag occurrences (key, pos, ts)).
@@ -1016,9 +1015,7 @@ object StreamingOps {
       salt: String = ""): (DataFrame, Long) => Unit = {
     require(nShards > 0, "nShards must be positive")
     (batch: DataFrame, _: Long) => {
-      graft.plans.GraftFunctions.register(batch.sparkSession)
-      val h = call_function("md5_prefix60",
-        concat(lit(salt), lit(":"), col(idCol).cast("string")).cast("binary"))
+      val h = GraftFunctions.saltedKeyHash(salt, col(idCol).cast("string"))
       batch.withColumn("shard", pmod(h, lit(nShards.toLong)))
         .repartition(col("shard"))
         .write.mode("append").partitionBy("shard").parquet(path)
@@ -1058,7 +1055,6 @@ object StreamingOps {
     require(maxDocsPerDomain > 0, "maxDocsPerDomain must be positive")
     (batch0: DataFrame, _: Long) => {
       val spark = batch0.sparkSession
-      graft.plans.GraftFunctions.register(spark)
       import graft.functions.UrlOps
       // null/unparseable URLs coalesce to the same "" sentinel the batch
       // capPerDomain uses: the anti-join and quota join below are plain
@@ -1097,9 +1093,8 @@ object StreamingOps {
       val fresh = batch.join(
         existing.select("url_canon").distinct(), Seq("url_canon"), "left_anti")
       val have = existing.groupBy("domain").agg(count(lit(1)).as("__have"))
-      val h = call_function("md5_prefix60",
-        concat(lit(salt), lit(":"),
-          coalesce(col(keyCol).cast("string"), lit(""))).cast("binary"))
+      val h = GraftFunctions.saltedKeyHash(salt,
+        coalesce(col(keyCol).cast("string"), lit("")))
       val wd = org.apache.spark.sql.expressions.Window
         .partitionBy(col("domain")).orderBy(h.asc, col(keyCol).asc)
       fresh.join(have, Seq("domain"), "left")

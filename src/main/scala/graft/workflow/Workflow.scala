@@ -6,7 +6,7 @@ import graft.operators._
 import graft.plans.GraftFunctions
 import graft.sources.{Ingest, Sampling}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{call_function, col, expr, lit, log, round, size, when}
+import org.apache.spark.sql.functions.{col, expr, lit, log, round, size, when}
 import org.yaml.snakeyaml.Yaml
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -149,7 +149,7 @@ object Workflow {
     ("quality_checker", "quality_checker", qualityChecker(_, configured)),
     ("text_pipeline", "text_pipeline", textPipeline(spark, _)),
     ("semantic_dedup", "semantic_dedup", semanticDedup),
-    ("curation_pipeline", "curation_pipeline", curationPipeline(spark, _)),
+    ("curation_pipeline", "curation_pipeline", curationPipeline),
     ("url_curation", "url_curation", urlCuration),
     ("tokenize", "tokenize", tokenize(spark, _)),
     ("data_mixture", "data_mixture", dataMixture),
@@ -162,7 +162,7 @@ object Workflow {
     ("heavy_hitters", "heavy_hitters", heavyHitters),
     ("transformers", "transformers", transformers),
     ("association_evaluator", "association_evaluator", associationEvaluator),
-    ("geospatial", "geospatial", geospatial(spark, _)),
+    ("geospatial", "geospatial", geospatial),
     ("drift_detector", "drift_detector", driftDetector(spark, _)),
     ("report_preprocessing", "report_preprocessing", reportPreprocessing),
     ("write_intermediate", "write_intermediate", writeIntermediate(spark, _)),
@@ -567,7 +567,7 @@ object Workflow {
   // leakage_split assigns train/test so a near-dup cluster never
   // straddles the boundary; source_overlap attaches the dense
   // cross-source Jaccard matrix as a stage metric.
-  private def curationPipeline(spark: SparkSession, c: Conf): Step = {
+  private def curationPipeline(c: Conf): Step = {
     val (textCol, idOpt) = (c.str("text_col", "text"), c.strOpt("id_col"))
     val dsir: Option[TextArm] = c.sub("dsir_select").map { dc =>
       val (targetCol, targetValue) = (dc.str("target_col", "lang"), dc.str("target_value", "en"))
@@ -584,9 +584,7 @@ object Workflow {
         // engine ln() ulp difference can't flip a rounded boundary, so the
         // SELECTED SET is oracle-replayable (ties break on id). limit()
         // plans as a distributed TakeOrdered, never a global sort.
-        GraftFunctions.register(spark)
-        val u = (expr("md5_prefix60(cast(cast(id as string) as binary))")
-          .cast("double") + lit(0.5)) / lit(math.pow(2.0, 60))
+        val u = GraftFunctions.md5Uniform(col("id"))
         val picked = scores
           .withColumn("gumbel_key", round(col("score") - log(-log(u)), 4))
           .orderBy(col("gumbel_key").desc, col("id").asc)
@@ -673,8 +671,8 @@ object Workflow {
           ("wordpiece_merges",
             merges.map(m => (m.rank, m.lhs, m.rhs, m.lhs + m.rhs, m.pairCount, m.score))
               .toDF("rank", "lhs", "rhs", "merged", "pair_count", "score"),
-            call_function("piece_encode", TextOps.normalizeText(col(textCol)),
-              lit(vocab.mkString("\n")), lit(maxWordLen)))
+            GraftFunctions.pieceEncode(TextOps.normalizeText(col(textCol)),
+              vocab.mkString("\n"), maxWordLen))
         }
       case "unigram" =>
         // unigram-LM (SentencePiece Viterbi-EM) train + encode
@@ -698,12 +696,11 @@ object Workflow {
           ("bpe_merges",
             merges.map(m => (m.rank, m.lhs, m.rhs, m.lhs + m.rhs, m.pairCount))
               .toDF("rank", "lhs", "rhs", "merged", "pair_count"),
-            call_function("bpe_encode", TextOps.normalizeText(col(textCol)),
-              lit(BpeTokenizer.mergesSpec(merges)), lit(maxWordLen)))
+            GraftFunctions.bpeEncode(TextOps.normalizeText(col(textCol)),
+              BpeTokenizer.mergesSpec(merges), maxWordLen))
         }
     }
     df => {
-      GraftFunctions.register(spark)
       val (name, table, tokens) = train(df)
       val out = df.withColumn("tokens", tokens).withColumn(s"n_tokens_$algo", size(col("tokens")))
       Some((if (keep) out else out.drop("tokens"), Map(name -> table)))
@@ -1035,18 +1032,17 @@ object Workflow {
   }
 
   // ---- geospatial (ref workflow geospatial_controller analog)
-  private def geospatial(spark: SparkSession, c: Conf): Step = {
+  private def geospatial(c: Conf): Step = {
     val (lat, lon) = (c.strOpt("lat_col"), c.strOpt("lon_col")) match {
       case (Some(la), Some(lo)) => (la, lo)
       case _ => throw new IllegalArgumentException("geospatial stage needs lat_col and lon_col")
     }
     val flags = c.strings("country_flags", Nil)
     transform(chain(Seq[Option[DataFrame => DataFrame]](
-      c.intOpt("geohash_precision").map(p => df => {
-        GraftFunctions.register(spark)
-        df.withColumn("geohash", expr(
-          s"geohash_encode(cast(`$lat` as double), cast(`$lon` as double), $p)"))
-      }),
+      c.intOpt("geohash_precision").map(p => df =>
+        df.withColumn("geohash", GraftFunctions.geohashEncode(
+          GraftFunctions.exactCol(lat).cast("double"),
+          GraftFunctions.exactCol(lon).cast("double"), p))),
       // single-match variant: overlapping boxes must not multiply the
       // frame's cardinality for every downstream stage
       Option.when(c.bool("in_country", false))(Geo.locationCountry(_, lat, lon)),

@@ -3,11 +3,10 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the classic Column⇄Expression converters (private[sql] in
-  * Spark 4): lets graft wrap a native Catalyst Expression into a Column
-  * directly — e.g. [[graft.plans.PslSuffixLenExpr]] inside a pure
-  * Column-level function where no SparkSession is in scope to resolve a
-  * registered function name. Same mechanism `call_function` uses after
-  * analysis; this just skips the registry round-trip.
+  * Spark 4): the typed constructors of [[graft.plans.GraftFunctions]]
+  * wrap each native Catalyst Expression into a Column directly, so no
+  * session function registry is read or written. The analyzed
+  * expression is the one `call_function` resolves to by name.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

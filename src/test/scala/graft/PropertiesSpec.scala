@@ -1089,4 +1089,64 @@ class PropertiesSpec extends SparkSpec {
       assert(after == before)
     }
   }
+
+  test("key and value columns named with a backtick or a quote reach the hashes as names") {
+    import graft.operators.{KnnImputer, LatentFeatures}
+    import graft.sources.Sampling
+    val plain = (1 to 200).map { i =>
+      val x = (i * 37 % 101).toDouble / 10
+      (i.toLong, x, if (i % 9 == 0) None else Some(3 * x + 5 + (i % 7) * 0.01), i % 5 + 5.0)
+    }.toDF("id", "x", "y", "z")
+    val odd = plain.withColumnRenamed("id", "a`b")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val kept = rows(Sampling.deterministicSample(plain, 0.3, Seq("id")))
+    assert(kept.nonEmpty && kept.size < 200)
+    assert(rows(Sampling.deterministicSample(odd, 0.3, Seq("a`b"))) == kept)
+    val knn = rows(KnnImputer.imputationKnnDeterministic(
+      plain, Seq("x", "y"), Seq("id"), k = 3, sampleSize = 40))
+    assert(rows(KnnImputer.imputationKnnDeterministic(
+      odd, Seq("x", "y"), Seq("a`b"), k = 3, sampleSize = 40)) == knn)
+    // the value column's NAME is part of its mask hash, so a renamed
+    // column masks other cells: the ranking must still pick the same
+    // winner, and the quoted-name run must be partition-invariant
+    def auto(df: org.apache.spark.sql.DataFrame, v: String) = LatentFeatures
+      .autoImputationDeterministic(df, Seq("x", v), Seq("id"))
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
+    val quoted = plain.withColumnRenamed("y", "it's")
+    val named = auto(quoted, "it's")
+    assert(named == auto(quoted.repartition(5), "it's"))
+    val plainAuto = auto(plain, "y")
+    assert(named.keySet == plainAuto.keySet)
+    assert(named.filter(_._2._2).keySet == plainAuto.filter(_._2._2).keySet)
+  }
+
+  test("engine ops build native expressions without writing the function registry") {
+    import graft.functions._
+    val s = spark.newSession()
+    import s.implicits._
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the dog", "https://a.example.com/x"),
+      (2L, "the quick brown fox jumps over the cat", "https://a.example.com/y"),
+      (3L, "lorem ipsum dolor sit amet", "https://b.example.org/z"))
+      .toDF("doc_id", "text", "url")
+    val pts = Seq((1L, 10.0, 20.0), (2L, 10.1, 20.1), (3L, -5.0, 3.0))
+      .toDF("id", "lat", "lon")
+    Seq(
+      Dedup.minhashNearDuplicatesMd5(docs, "text", "doc_id", threshold = 0.1),
+      Dedup.simhashMd5(docs, "text", "doc_id"),
+      UrlOps.capPerDomain(docs, "url", "doc_id", maxDocs = 1),
+      Sharding.shuffledShards(docs, "doc_id", nShards = 2),
+      TextOps.heavyHitters(docs, "text", 4),
+      BpeTokenizer.pieceEncode(docs, "text", "doc_id", Seq("th", "qu")),
+      Geo.clusterAnalysisDeterministic(pts, "id", "lat", "lon", k = 2)
+    ).foreach(_.collect())
+    val reg = s.sessionState.functionRegistry
+    Seq("geohash_encode", "md5_prefix60", "simhash_votes", "jaro_winkler",
+      "misra_gries", "bounded_collect_long", "bounded_topk_long", "bpe_encode",
+      "piece_encode", "unigram_viterbi", "psl_suffix_len").foreach { n =>
+      assert(!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)),
+        s"$n was written to the session's function registry")
+    }
+  }
 }
