@@ -29,9 +29,10 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
 
   /** Left-to-right double accumulation of float products — the one dot
-    * product every scoring path (brute force, IVF cogroup, LSH cogroup)
-    * shares, so results are bit-identical across exact and approximate
-    * paths.
+    * product every cosine scorer (brute force, cross-table, IVF and LSH
+    * cogroups via [[cosinePartialTopK]], semantic dedup) shares, so
+    * results are bit-identical across exact and approximate paths. Every
+    * scorer then keeps its neighbours in a [[TopK]].
     */
   private[graft] def dotF(a: Array[Float], b: Array[Float]): Double = {
     var s = 0.0
@@ -42,6 +43,65 @@ object Similarity {
   }
 
   private[graft] def normF(v: Array[Float]): Double = math.sqrt(dotF(v, v))
+
+  /** The one bounded top-k every vector search and the KNN imputer keep:
+    * slots ordered by (score desc, id asc), filled by insertion — no
+    * sort, no boxing. Distances are offered negated (exact in IEEE
+    * arithmetic), so smallest-distance-first uses the same comparisons.
+    * NaN scores (a zero-norm vector's cosine) are dropped: NaN compares
+    * false everywhere, so it would otherwise sit in a slot and push
+    * better neighbours out. `ids(0 until size)` / `scores(0 until size)`
+    * hold the result, best first.
+    */
+  private[graft] final class TopK(k: Int) {
+    val ids = new Array[Long](k)
+    val scores = new Array[Double](k)
+    var size = 0
+
+    def offer(id: Long, score: Double): Unit = if (!score.isNaN) {
+      var pos = size
+      while (pos > 0 && (scores(pos - 1) < score ||
+        (scores(pos - 1) == score && ids(pos - 1) > id))) pos -= 1
+      if (pos < k) {
+        var m = math.min(size, k - 1)
+        while (m > pos) { scores(m) = scores(m - 1); ids(m) = ids(m - 1); m -= 1 }
+        scores(pos) = score; ids(pos) = id
+        if (size < k) size += 1
+      }
+    }
+  }
+
+  /** Cosine top-k of probe `(pid, pv)` against an `(id, vector)` list
+    * with precomputed norms, skipping the probe's own id — the cosine
+    * twin of [[adcPartialTopK]], shared by the brute-force, IVF and LSH
+    * scorers (cos = dotF(probe, member) / (‖probe‖·‖member‖)).
+    */
+  private[graft] def cosinePartialTopK(pid: Long, pv: Array[Float],
+      members: Array[(Long, Array[Float])], norms: Array[Double], k: Int): TopK = {
+    val pn = normF(pv)
+    val top = new TopK(k)
+    var i = 0
+    while (i < members.length) {
+      val (cid, cv) = members(i)
+      if (cid != pid) top.offer(cid, dotF(pv, cv) / (pn * norms(i)))
+      i += 1
+    }
+    top
+  }
+
+  /** Global top-k over per-task partial top-k rows: rank each `key`'s
+    * rows by `score` (descending, or ascending for distances) then
+    * neighbor_id ascending, keep rank ≤ k and round the score HALF_UP at
+    * 4 — the merge every distributed top-k shares.
+    */
+  private def mergeTopK(partials: DataFrame, key: String, score: String,
+      ascending: Boolean, k: Int): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(
+      if (ascending) col(score).asc else col(score).desc, col("neighbor_id").asc)
+    partials.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .withColumn(score, round(col(score), 4))
+  }
 
   /** Exact brute-force cosine top-k neighbours for every vector.
     *
@@ -66,6 +126,7 @@ object Similarity {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     require(metric == "cosine" || metric == "l2", s"unknown metric '$metric'")
+    require(k >= 1, s"k must be >= 1, got $k")
     val l2 = metric == "l2"
     // driver-collect guard: beyond ~1e6 vectors the broadcast OOMs the
     // driver — fail over to the distributed exhaustive-probe IVF path,
@@ -96,12 +157,6 @@ object Similarity {
     val all: Array[(Long, Array[Float])] = base.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     val bc = df.sparkSession.sparkContext.broadcast(all)
-
-    def norm(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
     val outSchema = StructType(Seq(
       StructField("vec_id", LongType), StructField("neighbor_id", LongType),
       StructField(if (l2) "dist" else "cos", DoubleType), StructField("rank", IntegerType)))
@@ -110,46 +165,32 @@ object Similarity {
       val cand = bc.value
       // norms feed only the cosine branch — L2 must not pay O(N·dim)
       // per partition for values it never reads
-      val candNorms = if (l2) null else cand.map(c => norm(c._2))
+      val candNorms = if (l2) null else cand.map(c => normF(c._2))
       rows.flatMap { r =>
         val id = r.getLong(0)
         val v = r.getSeq[Float](1).toArray
-        val nv = if (l2) 0.0 else norm(v)
-        // top-k selection: (score desc, neighbor_id asc) — L2 negates the
-        // squared distance into the same descending frame
-        val topIds = new Array[Long](k)
-        val topCos = new Array[Double](k)
-        var filled = 0
-        var ci = 0
-        while (ci < cand.length) {
-          val (cid, cv) = cand(ci)
-          if (cid != id) {
-            var s = 0.0; var j = 0
-            val n = math.min(v.length, cv.length)
-            if (l2) {
-              while (j < n) { val d = v(j).toDouble - cv(j).toDouble; s += d * d; j += 1 }
-            } else {
-              while (j < n) { s += v(j).toDouble * cv(j).toDouble; j += 1 }
+        val top =
+          if (!l2) cosinePartialTopK(id, v, cand, candNorms, k)
+          else {
+            // L2 offers the negated squared distance: nearest first
+            val t = new TopK(k)
+            var ci = 0
+            while (ci < cand.length) {
+              val (cid, cv) = cand(ci)
+              if (cid != id) {
+                var s = 0.0; var j = 0
+                val n = math.min(v.length, cv.length)
+                while (j < n) { val d = v(j).toDouble - cv(j).toDouble; s += d * d; j += 1 }
+                t.offer(cid, -s)
+              }
+              ci += 1
             }
-            val cos = if (l2) -s else s / (nv * candNorms(ci))
-            // insertion position among current top
-            var pos = filled
-            while (pos > 0 && (topCos(pos - 1) < cos ||
-              (topCos(pos - 1) == cos && topIds(pos - 1) > cid))) pos -= 1
-            if (pos < k) {
-              val upto = math.min(filled, k - 1)
-              var m = upto
-              while (m > pos) { topCos(m) = topCos(m - 1); topIds(m) = topIds(m - 1); m -= 1 }
-              topCos(pos) = cos; topIds(pos) = cid
-              if (filled < k) filled += 1
-            }
+            t
           }
-          ci += 1
-        }
-        (0 until filled).iterator.map { i =>
-          val value = if (l2) -topCos(i) else topCos(i)
+        (0 until top.size).iterator.map { i =>
+          val value = if (l2) -top.scores(i) else top.scores(i)
           val rounded = BigDecimal(value).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          Row(id, topIds(i), rounded, i + 1)
+          Row(id, top.ids(i), rounded, i + 1)
         }
       }
     }(enc)
@@ -177,6 +218,7 @@ object Similarity {
       maxQueryRows: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
+    require(k >= 1, s"k must be >= 1, got $k")
     val qBase = queries.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     val qAll: Array[(Long, Array[Float])] = qBase.limit(
         math.min(maxQueryRows + 1, Int.MaxValue.toLong).toInt)
@@ -193,44 +235,23 @@ object Similarity {
     val partials = cBase.mapPartitions { rows =>
       val (qs, qn) = bcQ.value
       val nq = qs.length
-      val topIds = Array.fill(nq)(new Array[Long](k))
-      val topCos = Array.fill(nq)(new Array[Double](k))
-      val filled = new Array[Int](nq)
+      val tops = Array.fill(nq)(new TopK(k))
       rows.foreach { r =>
         val cid = r.getLong(0)
         val cv = r.getSeq[Float](1).toArray
         val cn = normF(cv)
         var qi = 0
         while (qi < nq) {
-          val cos = dotF(qs(qi)._2, cv) / (qn(qi) * cn)
-          // a zero-norm/NaN vector yields NaN cosine; NaN compares false
-          // everywhere, so it would SIT in a top-k slot uninvited and
-          // never be evicted — exclude undefined similarities outright
-          if (cos.isNaN) { qi += 1 }
-          else {
-          val ti = topIds(qi); val tc = topCos(qi)
-          var pos = filled(qi)
-          while (pos > 0 && (tc(pos - 1) < cos ||
-            (tc(pos - 1) == cos && ti(pos - 1) > cid))) pos -= 1
-          if (pos < k) {
-            var m = math.min(filled(qi), k - 1)
-            while (m > pos) { tc(m) = tc(m - 1); ti(m) = ti(m - 1); m -= 1 }
-            tc(pos) = cos; ti(pos) = cid
-            if (filled(qi) < k) filled(qi) += 1
-          }
+          tops(qi).offer(cid, dotF(qs(qi)._2, cv) / (qn(qi) * cn))
           qi += 1
-          }
         }
       }
       (0 until nq).iterator.flatMap { qi =>
-        (0 until filled(qi)).iterator.map(i => Row(qs(qi)._1, topIds(qi)(i), topCos(qi)(i)))
+        val t = tops(qi)
+        (0 until t.size).iterator.map(i => Row(qs(qi)._1, t.ids(i), t.scores(i)))
       }
     }(enc)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    partials
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", round(col("cos"), 4))
+    mergeTopK(partials, "query_id", "cos", ascending = false, k)
   }
 
   /** Driver-side md5 prefix-60: first 15 hex chars of md5(s) as a long —
@@ -374,6 +395,7 @@ object Similarity {
       memberCapPerCell: Int = 250000,
       lloydIters: Int = 15,
       lloydQuantize: Int = -1): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     import df.sparkSession.implicits._
     val base = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     // row count drives only the AUTO knobs (cell grid size, salt count);
@@ -401,20 +423,6 @@ object Similarity {
     val centers = localKMeans(sample, cells, seed, lloydIters, lloydQuantize)
     val bcCenters = df.sparkSession.sparkContext.broadcast(centers)
 
-    def nearestCells(v: Array[Float], n: Int): Array[Int] = {
-      val cs = bcCenters.value
-      cs.indices.map { ci =>
-        var d = 0.0; var j = 0; val c = cs(ci)
-        while (j < c.length && j < v.length) { val diff = v(j) - c(j); d += diff * diff; j += 1 }
-        (ci, d)
-      }.sortBy(_._2).take(math.min(n, cs.length)).map(_._1).toArray
-    }
-    def norm(v: Array[Float]): Double = {
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i).toDouble * v(i).toDouble; i += 1 }
-      math.sqrt(s)
-    }
-
     // typed rows keyed by (cell, salt) for members / probed (cell, salt)
     // for queries; the heavy scoring runs inside cogroup with primitive
     // arrays — the only per-row encoder cost is the 1-row-per-vector
@@ -422,55 +430,23 @@ object Similarity {
     val members = base.map { r =>
       val id = r.getLong(0)
       val v = r.getSeq[Float](1).toArray
-      (nearestCells(v, 1)(0), (java.lang.Long.hashCode(id) & 0x7fffffff) % numSalts,
-        id, v)
+      (nearestCellsTo(v, bcCenters.value, 1)(0), saltOf(id, numSalts), id, v)
     }
     val probers = base.flatMap { r =>
-      val v = r.getSeq[Float](1).toArray
-      val id = r.getLong(0)
-      for {
-        c <- nearestCells(v, nprobe)
-        salt <- 0 until numSalts
-      } yield (c, salt, id, v)
+      probes(r.getLong(0), r.getSeq[Float](1).toArray, bcCenters.value, nprobe, numSalts)
     }
     val partials = members.groupByKey(m => (m._1, m._2))
       .cogroup(probers.groupByKey(p => (p._1, p._2))) {
       (_, ms, ps) =>
         val mArr = ms.map(m => (m._3, m._4)).toArray
-        val mNorms = mArr.map(m => norm(m._2))
+        val mNorms = mArr.map(m => normF(m._2))
         ps.flatMap { case (_, _, pid, pv) =>
-          val pn = norm(pv)
-          val topIds = new Array[Long](k)
-          val topCos = new Array[Double](k)
-          var filled = 0
-          var ci = 0
-          while (ci < mArr.length) {
-            val (cid, cv) = mArr(ci)
-            if (cid != pid) {
-              var s = 0.0; var j = 0
-              val n = math.min(pv.length, cv.length)
-              while (j < n) { s += pv(j).toDouble * cv(j).toDouble; j += 1 }
-              val cos = s / (pn * mNorms(ci))
-              var pos = filled
-              while (pos > 0 && (topCos(pos - 1) < cos ||
-                (topCos(pos - 1) == cos && topIds(pos - 1) > cid))) pos -= 1
-              if (pos < k) {
-                var m = math.min(filled, k - 1)
-                while (m > pos) { topCos(m) = topCos(m - 1); topIds(m) = topIds(m - 1); m -= 1 }
-                topCos(pos) = cos; topIds(pos) = cid
-                if (filled < k) filled += 1
-              }
-            }
-            ci += 1
-          }
-          (0 until filled).map(i => (pid, topIds(i), topCos(i)))
+          val top = cosinePartialTopK(pid, pv, mArr, mNorms, k)
+          (0 until top.size).map(i => (pid, top.ids(i), top.scores(i)))
         }
     }.toDF("vec_id", "neighbor_id", "cos")
     // global top-k over the tiny per-cell partial top-k frame
-    val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    partials.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", round(col("cos"), 4))
+    mergeTopK(partials, "vec_id", "cos", ascending = false, k)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023, public
@@ -604,9 +580,10 @@ object Similarity {
       seed: Long = 42L,
       multiProbe: Boolean = true,
       numTables: Int = 1): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     require(numTables >= 1, "numTables must be >= 1")
     import df.sparkSession.implicits._
-    val dim = df.select(size(col(vecCol))).first().getInt(0)
+    val dim = firstDim(df, vecCol)
     val allPlanes: Array[Array[Array[Double]]] =
       Array.tabulate(numTables)(t => hyperplanes(numPlanes, dim, seed + t))
     val bcPlanes = df.sparkSession.sparkContext.broadcast(allPlanes)
@@ -648,28 +625,8 @@ object Similarity {
         else {
           val mNorms = mArr.map(m => normF(m._2))
           ps.flatMap { case (_, _, pid, pv) =>
-            val pn = normF(pv)
-            val topIds = new Array[Long](k)
-            val topCos = new Array[Double](k)
-            var filled = 0
-            var ci = 0
-            while (ci < mArr.length) {
-              val (cid, cv) = mArr(ci)
-              if (cid != pid) {
-                val cos = dotF(pv, cv) / (pn * mNorms(ci))
-                var pos = filled
-                while (pos > 0 && (topCos(pos - 1) < cos ||
-                  (topCos(pos - 1) == cos && topIds(pos - 1) > cid))) pos -= 1
-                if (pos < k) {
-                  var m = math.min(filled, k - 1)
-                  while (m > pos) { topCos(m) = topCos(m - 1); topIds(m) = topIds(m - 1); m -= 1 }
-                  topCos(pos) = cos; topIds(pos) = cid
-                  if (filled < k) filled += 1
-                }
-              }
-              ci += 1
-            }
-            (0 until filled).map(i => (pid, topIds(i), topCos(i)))
+            val top = cosinePartialTopK(pid, pv, mArr, mNorms, k)
+            (0 until top.size).map(i => (pid, top.ids(i), top.scores(i)))
           }
         }
       }.toDF("vec_id", "neighbor_id", "cos")
@@ -680,11 +637,14 @@ object Similarity {
     val pairs =
       if (numTables == 1) partials
       else partials.groupBy("vec_id", "neighbor_id").agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy("vec_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", round(col("cos"), 4))
+    mergeTopK(pairs, "vec_id", "cos", ascending = false, k)
   }
+
+  /** Width of the first vector of `vecCol` (one LIMIT 1 job), 0 on an
+    * empty frame — the hyperplane width an SRP bucketing needs.
+    */
+  private[graft] def firstDim(df: DataFrame, vecCol: String): Int =
+    df.select(size(col(vecCol))).head(1).headOption.fold(0)(_.getInt(0))
 
   /** Sign-bit SRP signature against a plane set — the tight-loop twin of
     * `lshBucket` (identical bit semantics: bit p set iff Σ vⱼ·planeⱼ ≥ 0
@@ -794,12 +754,29 @@ object Similarity {
     }.sortBy(_._2).take(math.min(n, centers.length)).map(_._1).toArray
   }
 
+  /** The id-hash salt that splits an oversized cell into `numSalts`
+    * member groups (IVF and IVF-PQ members and the saved index lists).
+    */
+  private def saltOf(id: Long, numSalts: Int): Int =
+    (java.lang.Long.hashCode(id) & 0x7fffffff) % numSalts
+
+  /** A probe's `(cell, salt, id, v)` fan-out rows: its `nprobe` nearest
+    * cells × every salt — shared by the IVF, IVF-PQ and serving probes.
+    */
+  private def probes(id: Long, v: Array[Float], centers: Array[Array[Double]], nprobe: Int,
+      numSalts: Int): Array[(Int, Int, Long, Array[Float])] =
+    for {
+      c <- nearestCellsTo(v, centers, nprobe)
+      salt <- (0 until numSalts).toArray
+    } yield (c, salt, id, v)
+
   /** Per-query ADC scoring against one cell's code list: build the
-    * m×ksub exact slice-to-centroid table once, then one lookup-sum and
-    * top-k insertion per member (smallest distance first, ties to the
-    * lower id). Shared verbatim by the batch top-k and the serving probe
-    * — the tie-break and table build are exactly what the oracles pin,
-    * so they must not fork. `exclude` skips the member whose id equals
+    * m×ksub exact slice-to-centroid table once, then one lookup-sum per
+    * member offered negated to the shared [[TopK]] (smallest distance
+    * first, ties to the lower id — the same rule as every cosine top-k).
+    * Shared verbatim by the batch top-k and the serving probe — the
+    * tie-break and table build are exactly what the oracles pin, so they
+    * must not fork. `exclude` skips the member whose id equals
     * `excludeId` (the batch self-join case); serving passes false and
     * keeps everything (a sentinel id would collide with a legitimate
     * negative key).
@@ -831,28 +808,18 @@ object Similarity {
       }
       mi += 1
     }
-    val topIds = new Array[Long](k)
-    val topD = new Array[Double](k)
-    var filled = 0
+    val top = new TopK(k)
     var i = 0
     while (i < members.length) {
       val (cid, codes) = members(i)
       if (!(exclude && cid == excludeId)) {
         var d = 0.0; var s = 0
         while (s < mSub) { d += table(s)(codes(s)); s += 1 }
-        var pos = filled
-        while (pos > 0 && (topD(pos - 1) > d ||
-          (topD(pos - 1) == d && topIds(pos - 1) > cid))) pos -= 1
-        if (pos < k) {
-          var q = math.min(filled, k - 1)
-          while (q > pos) { topD(q) = topD(q - 1); topIds(q) = topIds(q - 1); q -= 1 }
-          topD(pos) = d; topIds(pos) = cid
-          if (filled < k) filled += 1
-        }
+        top.offer(cid, -d)
       }
       i += 1
     }
-    (0 until filled).map(i => (topIds(i), topD(i)))
+    (0 until top.size).map(i => (top.ids(i), -top.scores(i)))
   }
 
   /** The fitSample lowest-md5 ids' vectors, in that deterministic order —
@@ -929,6 +896,7 @@ object Similarity {
       lloydIters: Int = 5,
       lloydQuantize: Int = 4,
       memberCapPerCell: Int = 250000): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     require(cellCount >= 1, "cellCount must be >= 1")
     require(nprobe >= 1, "nprobe must be >= 1")
     import df.sparkSession.implicits._
@@ -947,17 +915,11 @@ object Similarity {
     val members = base.map { r =>
       val id = r.getLong(0)
       val v = r.getSeq[Float](1).toArray
-      (nearestCellsTo(v, bcCenters.value, 1)(0),
-        (java.lang.Long.hashCode(id) & 0x7fffffff) % numSalts, id,
+      (nearestCellsTo(v, bcCenters.value, 1)(0), saltOf(id, numSalts), id,
         pqCode(v, bcBooks.value))
     }
     val probers = base.flatMap { r =>
-      val v = r.getSeq[Float](1).toArray
-      val id = r.getLong(0)
-      for {
-        c <- nearestCellsTo(v, bcCenters.value, nprobe)
-        salt <- 0 until numSalts
-      } yield (c, salt, id, v)
+      probes(r.getLong(0), r.getSeq[Float](1).toArray, bcCenters.value, nprobe, numSalts)
     }
     val partials = members.groupByKey(x => (x._1, x._2))
       .cogroup(probers.groupByKey(p => (p._1, p._2))) { (_, ms, ps) =>
@@ -968,10 +930,7 @@ object Similarity {
             .map { case (nb, d) => (pid, nb, d) }
         }
       }.toDF("vec_id", "neighbor_id", "adist")
-    val w = Window.partitionBy("vec_id").orderBy(col("adist").asc, col("neighbor_id").asc)
-    partials.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("adist", round(col("adist"), 4))
+    mergeTopK(partials, "vec_id", "adist", ascending = true, k)
   }
 
   /** Build the IVF-PQ SERVING index over a corpus — the hash-once shape
@@ -1018,8 +977,7 @@ object Similarity {
     val lists = base.map { r =>
       val id = r.getLong(0)
       val v = r.getSeq[Float](1).toArray
-      (id, nearestCellsTo(v, bcCenters.value, 1)(0),
-        (java.lang.Long.hashCode(id) & 0x7fffffff) % numSalts,
+      (id, nearestCellsTo(v, bcCenters.value, 1)(0), saltOf(id, numSalts),
         pqCode(v, bcBooks.value))
     }.toDF("id", "cell", "salt", "codes")
     (model, lists)
@@ -1108,6 +1066,7 @@ object Similarity {
       lists: DataFrame,
       k: Int = 3,
       nprobe: Int = 3): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     import queries.sparkSession.implicits._
     val (centers, books) = parseIvfPqModel(model)
     val bcCenters = queries.sparkSession.sparkContext.broadcast(centers)
@@ -1123,12 +1082,7 @@ object Similarity {
     val probers = queries
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .flatMap { r =>
-        val id = r.getLong(0)
-        val v = r.getSeq[Float](1).toArray
-        for {
-          c <- nearestCellsTo(v, bcCenters.value, nprobe)
-          salt <- 0 until numSalts
-        } yield (c, salt, id, v)
+        probes(r.getLong(0), r.getSeq[Float](1).toArray, bcCenters.value, nprobe, numSalts)
       }
     val partials = members.groupByKey(x => (x._1, x._2))
       .cogroup(probers.groupByKey(p => (p._1, p._2))) { (_, ms, ps) =>
@@ -1141,10 +1095,7 @@ object Similarity {
             .map { case (nb, d) => (pid, nb, d) }
         }
       }.toDF("query_id", "neighbor_id", "adist")
-    val w = Window.partitionBy("query_id").orderBy(col("adist").asc, col("neighbor_id").asc)
-    partials.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("adist", round(col("adist"), 4))
+    mergeTopK(partials, "query_id", "adist", ascending = true, k)
   }
 
   /** kNN label-noise audit (the confident-learning-style mislabel

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Similarity
 import graft.plans.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
@@ -22,6 +23,7 @@ object KnnImputer {
       k: Int = 5,
       sampleSize: Int = 10000,
       seed: Long = 42L): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     val complete = df.select(cols.map(c => col(c).cast("double")): _*).na.drop()
     // stats estimate instead of a full count() — at 100 TB the extra scan
     // per fit dominates; the fraction only sizes the sample (limit caps it)
@@ -58,6 +60,7 @@ object KnnImputer {
       sampleKeyCols: Seq[String],
       k: Int = 5,
       sampleSize: Int = 10000): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     require(sampleKeyCols.nonEmpty, "deterministic KNN needs sample key columns")
     val h = GraftFunctions.joinedKeyHash("|", sampleKeyCols)
     val sample: Array[Array[Double]] = df.na.drop(cols)
@@ -114,10 +117,9 @@ object KnnImputer {
           else if (vals.forall(_.isNaN)) bcMeans.value.clone()
           else {
             // k nearest complete rows by scaled euclidean over observed
-            // dims — bounded insertion top-k, no full sort, no boxing
-            val kk = math.min(k, samp.length)
-            val topIdx = new Array[Int](kk)
-            val topDist = Array.fill(kk)(Double.MaxValue)
+            // dims — the shared bounded top-k on the negated distance,
+            // id = sample index, so ties keep the earlier sample row
+            val top = new Similarity.TopK(math.min(k, samp.length))
             var si = 0
             while (si < samp.length) {
               val s = samp(si)
@@ -130,22 +132,19 @@ object KnnImputer {
                 }
                 j += 1
               }
-              val dist = if (m == 0) Double.MaxValue else d * nCols / m
-              if (dist < topDist(kk - 1)) {
-                var pos = kk - 1
-                while (pos > 0 && topDist(pos - 1) > dist) {
-                  topDist(pos) = topDist(pos - 1); topIdx(pos) = topIdx(pos - 1); pos -= 1
-                }
-                topDist(pos) = dist; topIdx(pos) = si
-              }
+              val dist = d * nCols / m
+              if (java.lang.Double.isFinite(dist)) top.offer(si, -dist)
               si += 1
             }
             vals.zipWithIndex.map { case (v, j) =>
               if (!v.isNaN) v
+              // no finite distance (overflowing values): the column mean,
+              // like a row with no observed dimension
+              else if (top.size == 0) bcMeans.value(j)
               else {
                 var sum = 0.0; var t = 0
-                while (t < kk) { sum += samp(topIdx(t))(j); t += 1 }
-                sum / kk
+                while (t < top.size) { sum += samp(top.ids(t).toInt)(j); t += 1 }
+                sum / top.size
               }
             }
           }

@@ -339,7 +339,7 @@ object TextQueries {
     "q_lsh_buckets",
     (s, dir) => {
       val emb = tables(s, dir).embeddings
-      val dim = emb.select(size(col("embedding"))).first().getInt(0)
+      val dim = Similarity.firstDim(emb, "embedding")
       val planes = Similarity.hyperplanes(8, dim, seed = 42L)
       emb.select(col("vec_id").cast("long").as("vec_id"),
         Similarity.lshBucket(col("embedding"), planes).as("bucket"))

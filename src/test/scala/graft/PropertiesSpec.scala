@@ -1149,4 +1149,106 @@ class PropertiesSpec extends SparkSpec {
         s"$n was written to the session's function registry")
     }
   }
+
+  test("bounded top-k kernel equals a sort of the non-NaN stream") {
+    import graft.functions.Similarity
+    // small half-steps plant ties; ±0.0, NaN and ±∞ are the IEEE edges
+    val scoreGen = Gen.frequency(
+      4 -> Gen.choose(-3, 3).map(_ / 2.0),
+      2 -> Gen.choose(-1e6, 1e6),
+      1 -> Gen.oneOf(0.0, -0.0),
+      1 -> Gen.const(Double.NaN),
+      1 -> Gen.oneOf(Double.PositiveInfinity, Double.NegativeInfinity))
+    val streamGen = for {
+      n <- Gen.choose(0, 60)
+      ids <- Gen.listOfN(n, Gen.choose(-20L, 20L))
+      scores <- Gen.listOfN(n, scoreGen)
+      k <- Gen.choose(1, 80) // often larger than the stream
+    } yield (ids.zip(scores), k)
+    for ((stream, k) <- samples(streamGen, 300)) {
+      val top = new Similarity.TopK(k)
+      stream.foreach { case (id, s) => top.offer(id, s) }
+      val got = (0 until top.size).map(i => (top.ids(i), top.scores(i)))
+      // the kernel compares with ==, so 0.0 and -0.0 tie and fall back to
+      // the id; `+ 0.0` maps -0.0 to 0.0 for the total-order reference sort
+      val want = stream.filter(!_._2.isNaN)
+        .sortBy { case (id, s) => (-s + 0.0, id) }(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(k)
+      assert(got == want, s"k=$k stream=$stream")
+    }
+  }
+
+  test("vector top-k and KNN imputers reject k < 1 and a vector wider than the index") {
+    import graft.functions.Similarity
+    import graft.operators.KnnImputer
+    val vecs = (1 to 8).map(i => (i.toLong, Array(i.toFloat, 1f, (i % 3).toFloat, 2f)))
+      .toDF("id", "embedding")
+    val (model, lists) = Similarity.buildIvfPqIndex(vecs, "id", "embedding",
+      cellCount = 2, m = 2, ksub = 2)
+    val nums = (1 to 8).map(i => (i.toLong, i.toDouble, if (i == 3) None else Some(2.0 * i)))
+      .toDF("id", "x", "y")
+    for (k <- Seq(0, -1)) Seq[(String, () => Any)](
+      "bruteForceTopK" -> (() => Similarity.bruteForceTopK(vecs, "id", "embedding", k = k)),
+      "crossTopK" -> (() => Similarity.crossTopK(vecs, vecs, "id", "embedding", k = k)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(vecs, "id", "embedding", k = k, cellCount = 2)),
+      "lshTopK" -> (() => Similarity.lshTopK(vecs, "id", "embedding", k = k)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(vecs, "id", "embedding", k = k,
+        cellCount = 2, m = 2, ksub = 2)),
+      "annAgainstIndex" -> (() => Similarity.annAgainstIndex(vecs, "id", "embedding",
+        model, lists, k = k)),
+      "imputationKnn" -> (() => KnnImputer.imputationKnn(nums, Seq("x", "y"), k = k)),
+      "imputationKnnDeterministic" -> (() => KnnImputer.imputationKnnDeterministic(
+        nums, Seq("x", "y"), Seq("id"), k = k))
+    ).foreach { case (name, op) =>
+      val e = withClue(s"$name k=$k")(intercept[IllegalArgumentException](op()))
+      assert(e.getMessage.contains("k must be >= 1"), s"$name: ${e.getMessage}")
+    }
+    // a 65-dim vector among 64-dim ones: its id is not the md5-lowest, so
+    // the quantizer's fit sample starts 64-dim and the centroids are 64-dim
+    val rows = (1 to 20).map(i =>
+      (i.toLong, Array.tabulate(64)(j => ((i * 31 + j * 7) % 13).toFloat - 6f)))
+    val plantedId = (21L to 30L).maxBy(id => Similarity.md5Prefix60(id.toString))
+    val wide = (rows :+ (plantedId -> Array.fill(65)(1f))).toDF("id", "embedding")
+    val e = intercept[Exception](
+      Similarity.ivfTopK(wide, "id", "embedding", k = 3, cellCount = 2, nprobe = 2).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("vector dim 65 != index dim 64")), msgs.mkString(" | "))
+  }
+
+  test("KNN fill with no finite neighbour distance falls back to the column mean") {
+    import graft.operators.KnnImputer
+    // x = +∞ makes every scaled distance infinite: no neighbour qualifies,
+    // so y takes its column mean instead of an average of stale slots
+    val df = Seq((1L, 1.0, Some(10.0)), (2L, 2.0, Some(20.0)), (3L, 3.0, Some(60.0)),
+      (4L, Double.PositiveInfinity, None)).toDF("id", "x", "y")
+    for (out <- Seq(KnnImputer.imputationKnn(df, Seq("x", "y"), k = 2),
+        KnnImputer.imputationKnnDeterministic(df, Seq("x", "y"), Seq("id"), k = 2))) {
+      val y4 = out.filter(col("id") === 4L).select("y").head().getDouble(0)
+      assert(y4 == 30.0, s"filled y = $y4")
+    }
+  }
+
+  test("vector ops on an empty embedding frame: a declared error or an empty result") {
+    import graft.functions.Similarity
+    import org.apache.spark.sql.DataFrame
+    val empty = Seq.empty[(Long, Array[Float], String)].toDF("id", "embedding", "label")
+    // nothing to fit a quantizer or a codebook on: IllegalArgumentException
+    val failing = Seq[(String, () => Any)](
+      "ivfTopK" -> (() => Similarity.ivfTopK(empty, "id", "embedding")),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(empty, "id", "embedding")),
+      "pqEncode" -> (() => Similarity.pqEncode(empty, "id", "embedding")),
+      "buildIvfPqIndex" -> (() => Similarity.buildIvfPqIndex(empty, "id", "embedding")),
+      "semanticDedup" -> (() => Similarity.semanticDedup(empty, "id", "embedding")),
+      "labelNoiseKnn" -> (() => Similarity.labelNoiseKnn(empty, "id", "embedding", "label")))
+    for ((name, op) <- failing)
+      withClue(name)(intercept[IllegalArgumentException](op()))
+    val emptyOut = Seq[(String, () => DataFrame)](
+      "bruteForceTopK" -> (() => Similarity.bruteForceTopK(empty, "id", "embedding")),
+      "crossTopK" -> (() => Similarity.crossTopK(empty, empty, "id", "embedding")),
+      "lshTopK" -> (() => Similarity.lshTopK(empty, "id", "embedding")),
+      "embeddingNearDuplicates" -> (() => Dedup.embeddingNearDuplicates(empty, "id", "embedding")))
+    for ((name, op) <- emptyOut) assert(op().collect().isEmpty, name)
+  }
 }

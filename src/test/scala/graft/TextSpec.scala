@@ -675,6 +675,27 @@ text_pipeline:
     val withZero = Similarity.crossTopK(qs, dirty.repartition(3), "vec_id", "embedding", k = 2)
       .collect().map(r => (r.getLong(0), r.getInt(3)) -> r.getLong(1)).toMap
     assert(withZero == got, s"zero vector leaked into top-k: $withZero")
+    // the self-join top-k paths share the rule: a zero vector placed
+    // first (so it is scored while the slots are still empty) must not
+    // change any non-zero vector's neighbours
+    val pts = (1 to 12).map { i =>
+      (i.toLong, Array((i % 5).toFloat - 2f, (i % 3).toFloat + 0.5f, (i * 7 % 4).toFloat - 1f))
+    }.toDF("vec_id", "embedding")
+    val zeroFirst = Seq((99L, Array(0f, 0f, 0f))).toDF("vec_id", "embedding").unionByName(pts)
+    def neighbours(top: org.apache.spark.sql.DataFrame) = top
+      .filter(col("vec_id") =!= 99L).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("rank")) -> r.getAs[Long]("neighbor_id"))
+      .toMap
+    for ((name, op) <- Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+        "bruteForceTopK" -> (d => Similarity.bruteForceTopK(d, "vec_id", "embedding", k = 3)),
+        "ivfTopK" -> (d => Similarity.ivfTopK(d, "vec_id", "embedding", k = 3,
+          cellCount = 3, nprobe = 3)),
+        "lshTopK" -> (d => Similarity.lshTopK(d, "vec_id", "embedding", k = 3, numPlanes = 2)))) {
+      val clean = neighbours(op(pts.coalesce(1)))
+      assert(clean.size == 36, s"$name: ${clean.size} neighbours")
+      val dirty = neighbours(op(zeroFirst.coalesce(1)))
+      assert(dirty == clean, s"$name: zero vector leaked into top-k: $dirty")
+    }
   }
 
   test("concat-and-chunk packing assigns offsets and sequence spans") {
